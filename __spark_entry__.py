@@ -146,7 +146,7 @@ def q_partition_verdicts(spark, sf_dir):
 
 def q_uniqueness(spark, sf_dir):
     tr = _transcripts(spark, sf_dir)
-    return uniq_op.duplicate_counts(tr, ["conv_id", "turn_idx"], salted=True).select(
+    return uniq_op.duplicate_counts(tr, ["conv_id", "turn_idx"]).select(
         "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "dup_count"
     )
 

@@ -371,18 +371,11 @@ def main():
     )
     n_hot = hot.filter(F.col("conv_id") == "conv_hot").count()
     meta["skew_hot_conv_turns"] = n_hot
-    # salted=False = the ENGINE's default plan (native partial-agg);
-    # the explicit-salt variant is opt-in and measured 2x slower, so the
-    # skew evidence must certify the plan users actually run
     run_pair(
         "uniqueness_balanced",
-        lambda: uniq_op.duplicate_report(
-            tr, ["conv_id", "turn_idx"], salted=False
-        ),
+        lambda: uniq_op.duplicate_report(tr, ["conv_id", "turn_idx"]),
         "uniqueness_hot_key",
-        lambda: uniq_op.duplicate_report(
-            hot, ["conv_id", "turn_idx"], salted=False
-        ),
+        lambda: uniq_op.duplicate_report(hot, ["conv_id", "turn_idx"]),
     )
     hot.unpersist()
 

@@ -212,7 +212,10 @@ def cmd_stream_dedup(args) -> int:
     feed the batch `dedup` command's exact verifier; state per LSH
     bucket is one representative id (see
     streaming.stateful.stream_near_dup_candidates)."""
-    from .streaming.stateful import stream_near_dup_candidates
+    from .streaming.stateful import (
+        NEAR_DUP_OUTPUT_SCHEMA,
+        stream_near_dup_candidates,
+    )
 
     spark = build_session(app_name="dce-stream-dedup")
     stream = (
@@ -237,7 +240,9 @@ def cmd_stream_dedup(args) -> int:
         .start()
     )
     q.awaitTermination()
-    n = spark.read.parquet(args.out).count()
+    # explicit schema: a drain that runs no batch (no new documents)
+    # writes no data file, so schema inference on the sink would fail
+    n = spark.read.schema(NEAR_DUP_OUTPUT_SCHEMA).parquet(args.out).count()
     print(json.dumps({"candidate_rows": n, "out": args.out}))
     _stop(spark)
     return 0

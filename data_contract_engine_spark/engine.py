@@ -6,7 +6,7 @@ Replaces the reference's HTTP + per-record interpreter lifecycle
     contract YAML → dataclass IR → compile to Column expressions →
     one fused select (schema rules) →
     one global agg (freshness/completeness/statistics) +
-    salted uniqueness agg + broadcast referential anti-join + drift →
+    uniqueness agg + broadcast referential anti-join + drift →
     verdict/violation/report artifacts.
 
 Everything distributed stays a DataFrame (violations, per-record results,
@@ -380,17 +380,13 @@ class ValidationRun:
         if not rules.uniqueness:
             return []
         keys = rules.uniqueness.get("fields", [])
-        if len(keys) > 1 and not self.engine.salted_aggregates:
-            # all keys in ONE job via GROUPING SETS (one fact scan); the
-            # explicit-salt variant keeps the per-key loop (its two-stage
-            # plan doesn't compose with grouping sets)
+        if len(keys) > 1:
+            # all keys in ONE job via GROUPING SETS (one fact scan)
             reports = uniq_op.multi_duplicate_reports(self.df, keys)
         else:
             reports = {
                 (k if isinstance(k, str) else ",".join(k)):
-                uniq_op.duplicate_report(
-                    self.df, k, salted=self.engine.salted_aggregates
-                )
+                uniq_op.duplicate_report(self.df, k)
                 for k in keys
             }
         out: List[QualityError] = []
@@ -416,8 +412,7 @@ class ValidationRun:
             return None
         frames = [
             uniq_op.duplicate_violations(
-                self.df, key, self.contract.name,
-                salted=self.engine.salted_aggregates,
+                self.df, key, self.contract.name
             ).select(
                 "contract_id", "rule", "field",
                 F.concat_ws(
@@ -452,9 +447,11 @@ class ValidationRun:
         for column, spec in rules.referential.items():
             if "values" in spec:
                 continue  # handled in the fused agg
-            vocab = self._resolve_vocab(column, spec)
+            vocab = self.engine.vocab_tables.get(spec["table"])
             if vocab is None:
-                continue
+                # an unresolvable table raises Spark's error naming it: a
+                # misconfigured rule is never skipped silently
+                vocab = self.engine.spark.table(spec["table"])
             vocabs[column] = (vocab, spec.get("column"))
         if not vocabs:
             return []
@@ -476,19 +473,6 @@ class ValidationRun:
                     )
                 )
         return out
-
-    def _resolve_vocab(self, column: str, spec: Dict[str, Any]):
-        if "values" in spec:
-            return ref_op.vocab_df(
-                self.engine.spark, spec["values"], spec.get("column") or column
-            )
-        table = self.engine.vocab_tables.get(spec.get("table", ""))
-        if table is not None:
-            return table
-        try:
-            return self.engine.spark.table(spec["table"])
-        except Exception:
-            return None
 
     def _drift_errors_fused(
         self,
@@ -547,10 +531,6 @@ class ContractEngine:
     """Facade: ``ContractEngine(spark).validate(df, contract_yaml)``.
 
     Options:
-      * ``salted_aggregates``: run uniqueness with an EXPLICIT salt stage.
-        Default False: Spark's hash-aggregate partial combine already
-        salts count-style aggs by input partition (see
-        operators/uniqueness.py measurement note);
       * ``vocab_tables``: name → DataFrame registry for referential rules;
       * ``drift_baseline``: baseline DataFrame for drift rules;
       * ``now_epoch``: freeze "now" for deterministic freshness tests;
@@ -560,7 +540,6 @@ class ContractEngine:
     def __init__(
         self,
         spark: SparkSession,
-        salted_aggregates: bool = False,
         vocab_tables: Optional[Dict[str, DataFrame]] = None,
         drift_baseline: Optional[DataFrame] = None,
         drift_baseline_snapshot: Optional[Dict[str, Dict[str, list]]] = None,
@@ -568,7 +547,6 @@ class ContractEngine:
         compile_options: Optional[CompileOptions] = None,
     ):
         self.spark = spark
-        self.salted_aggregates = salted_aggregates
         self.vocab_tables = vocab_tables or {}
         self.drift_baseline = drift_baseline
         # {col: {"edges": [...], "counts": [...]}} from

@@ -536,16 +536,3 @@ def ivf_topk(
     )
     return scored.orderBy(F.desc("sim"), F.col(id_col)).limit(k)
 
-
-def cosine_topk_pandas(
-    emb_df: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Alias of :func:`cosine_topk` since round 5: the default scorer IS
-    the Arrow-batched numpy scan now (fold-exact — the earlier matmul
-    form here differed from the JVM fold in the last ulp, which this
-    module no longer tolerates anywhere). Kept for API compatibility."""
-    return cosine_topk(emb_df, query_vec, k, id_col, vec_col)

@@ -66,30 +66,6 @@ def append_run_summary(
     df.write.mode("append").parquet(path)
 
 
-def merge_upsert(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    keys: Sequence[str],
-) -> None:
-    """Idempotent upsert keyed by ``keys`` — the parquet emulation of
-    Iceberg ``MERGE INTO`` (read target, drop rows matching update keys
-    via left-anti join, union, rewrite). Used by the metrics rollup so
-    re-aggregating a day replaces that day's row exactly once; on an
-    Iceberg catalog swap this function for a real MERGE (one metadata
-    transaction, no rewrite)."""
-    try:
-        target = spark.read.parquet(target_path)
-    except Exception:
-        updates.write.mode("overwrite").parquet(target_path)
-        return
-    keep = target.join(updates.select(*keys).distinct(), list(keys), "left_anti")
-    merged = keep.unionByName(updates, allowMissingColumns=True)
-    tmp = target_path.rstrip("/") + "__tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(target_path)
-
-
 def write_quarantine(
     run,
     path: str,

@@ -99,8 +99,7 @@ def main():
         "operators/uniqueness.py for the measured comparison vs an "
         "explicit salt stage).\n\n"
         "```\n"
-        + trim(plan_of(uniq_op.duplicate_counts(tr, ["conv_id", "turn_idx"],
-                                                salted=False)))
+        + trim(plan_of(uniq_op.duplicate_counts(tr, ["conv_id", "turn_idx"])))
         + "```\n"
     )
 

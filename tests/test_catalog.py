@@ -2,8 +2,8 @@
 
 One scenario, any backend: append-read round trip, MERGE idempotence,
 retention delete, and a full checkpoint/resume cycle through
-``catalog_checkpoint_store``. The parquet emulation runs it for real; the
-Iceberg implementation's SQL generation is pinned here (execution needs
+``catalog_checkpoint_store``. The local snapshot catalog runs it for
+real; the Iceberg implementation's SQL generation is pinned here (execution needs
 the iceberg-spark-runtime jars, absent in this sandbox — see
 sources/catalog.py for the required session config).
 """
@@ -18,7 +18,6 @@ from data_contract_engine_spark.checkpoint import validate_resumable
 from data_contract_engine_spark.sources.catalog import (
     ConcurrentWriteError,
     IcebergCatalog,
-    ParquetCatalog,
     SnapshotParquetCatalog,
     catalog_checkpoint_store,
 )
@@ -31,12 +30,11 @@ schema:
 """
 
 
-@pytest.fixture(params=["parquet", "snapshot"])
-def pcat(spark, tmp_path, request):
-    """The catalog CONTRACT tests run against every local backend: the
-    plain parquet emulation and the transactional snapshot catalog."""
-    cls = {"parquet": ParquetCatalog, "snapshot": SnapshotParquetCatalog}
-    return cls[request.param](spark, str(tmp_path / "warehouse"))
+@pytest.fixture(params=["snapshot"])
+def pcat(spark, tmp_path):
+    """The catalog CONTRACT tests run against every local backend (one
+    param per backend; the snapshot catalog is the only one)."""
+    return SnapshotParquetCatalog(spark, str(tmp_path / "warehouse"))
 
 
 def test_catalog_append_read_merge_contract(spark, pcat):
@@ -135,7 +133,7 @@ def test_iceberg_sql_generation_pinned(spark):
 def test_iceberg_merge_sql_key_only_table(spark):
     """All columns are keys → no UPDATE SET clause (a bare one is a parse
     error); the upsert degenerates to insert-if-absent, matching the
-    ParquetCatalog's behavior for key-presence tables."""
+    local catalog's behavior for key-presence tables."""
     cat = IcebergCatalog(spark, catalog="local", namespace="dce")
     sql = cat.merge_sql("seen", "src", keys=("k",), columns=("k",))
     assert "UPDATE SET" not in sql
@@ -153,42 +151,155 @@ def scat(spark, tmp_path):
     return SnapshotParquetCatalog(spark, str(tmp_path / "snap_wh"))
 
 
-def test_snapshot_commit_is_atomic(spark, scat, tmp_path):
-    """A crash between data write and pointer flip must leave the previous
-    snapshot fully readable: simulate by writing a data unit + manifest
-    but NOT flipping VERSION — readers still see the old version."""
+def _units(scat, table):
+    """Data units on disk vs the ones any published manifest references."""
     import json
     import os
 
-    df1 = spark.createDataFrame([("a", 1)], "k string, v int")
-    scat.overwrite("t", df1)
-    assert scat.read("t").count() == 1
+    tdir = scat._dir(table)
+    on_disk = {os.path.join("data", n)
+               for n in os.listdir(os.path.join(tdir, "data"))}
+    referenced = set()
+    for name in os.listdir(os.path.join(tdir, "snapshots")):
+        if name.endswith(".json"):
+            with open(os.path.join(tdir, "snapshots", name)) as f:
+                referenced.update(u["path"] for u in json.load(f)["units"])
+    return on_disk, referenced
 
-    # simulate the torn write: unit + manifest for v2 exist, pointer not
-    # flipped (crash just before os.replace)
-    tdir = scat._dir("t")
-    unit = scat._write_unit("t", spark.createDataFrame(
-        [("b", 2), ("c", 3)], "k string, v int"))
-    with open(os.path.join(tdir, "snapshots", "v2.json"), "w") as f:
-        json.dump({"version": 2, "parent": 1, "ts": "x", "operation":
-                   "append", "schema": df1.schema.json(),
-                   "units": [unit]}, f)
-    got = {r["k"] for r in scat.read("t").collect()}
-    assert got == {"a"}  # old snapshot intact; torn v2 invisible
 
-    # while the torn manifest is YOUNG it is indistinguishable from an
-    # in-flight concurrent commit — a new commit must refuse, not reclaim
-    with pytest.raises(ConcurrentWriteError):
-        scat.append("t", spark.createDataFrame([("d", 4)], "k string, v int"))
+class _Killed(BaseException):
+    """Stands in for the writer process dying at the link."""
 
-    # once older than the grace window it is provably torn (a live writer
-    # flips VERSION within milliseconds) and the slot is reclaimed
-    manifest = os.path.join(tdir, "snapshots", "v2.json")
-    past = os.path.getmtime(manifest) - scat.TORN_MANIFEST_GRACE_SEC - 1
-    os.utime(manifest, (past, past))
-    scat.append("t", spark.createDataFrame([("d", 4)], "k string, v int"))
-    assert {r["k"] for r in scat.read("t").collect()} == {"a", "d"}
 
+def test_snapshot_commit_is_atomic(spark, scat, monkeypatch):
+    """A writer that dies before its link leaves a temp manifest and an
+    unreferenced unit — and nothing else: readers keep the old snapshot,
+    the next writer commits at once (no grace window), and expiry
+    reclaims the leftovers."""
+    import json
+    import os
+
+    scat.overwrite("t", spark.createDataFrame([("a", 1)], "k string, v int"))
+    sdir = os.path.join(scat._dir("t"), "snapshots")
+    df_dead = spark.createDataFrame([("dead", 2)], "k string, v int")
+    df_next = spark.createDataFrame([("next", 3)], "k string, v int")
+    real_link = os.link
+    seen = {}
+
+    def die_at_link(src, dst):
+        # the writer is frozen here with everything but the link done —
+        # from any other process this is exactly a crash
+        monkeypatch.setattr(os, "link", real_link)
+        seen["temp"] = [n for n in os.listdir(sdir) if n.endswith(".tmp")]
+        with open(src) as f:
+            seen["temp_path"], seen["temp_body"] = src, f.read()
+        on_disk, referenced = _units(scat, "t")
+        seen["orphans"] = on_disk - referenced
+        seen["rows"] = {r["k"] for r in scat.read("t").collect()}
+        scat.append("t", df_next)  # the next writer, not blocked
+        raise _Killed
+
+    monkeypatch.setattr(os, "link", die_at_link)
+    with pytest.raises(_Killed):
+        scat.append("t", df_dead)
+
+    assert seen["temp"] == [os.path.basename(seen["temp_path"])]
+    assert len(seen["orphans"]) == 1
+    # the unpublished manifest was already complete when the writer died
+    assert json.loads(seen["temp_body"])["units"][-1]["path"] \
+        in seen["orphans"]
+    assert seen["rows"] == {"a"}  # the dead commit was never visible
+    assert scat._version("t") == 2
+    assert {r["k"] for r in scat.read("t").collect()} == {"a", "next"}
+    on_disk, referenced = _units(scat, "t")
+    assert seen["orphans"] <= on_disk - referenced
+
+    # a killed writer runs no cleanup: put its temp manifest back the
+    # way a real crash leaves it; expiry reclaims it with the unit
+    with open(seen["temp_path"], "w") as f:
+        f.write(seen["temp_body"])
+    res = scat.expire_snapshots("t", retain_last=2)
+    assert res == {"snapshots": 0, "units": 1}
+    assert sorted(os.listdir(sdir)) == ["v1.json", "v2.json"]
+
+
+def test_snapshot_racing_writers_exactly_one_commits(spark, scat, monkeypatch):
+    """Writers A and B commit from the same parent; B commits between
+    A's manifest write and A's link. Exactly one commit stands: A raises
+    ConcurrentWriteError, the table reads B's rows and no manifest
+    references A's unit."""
+    import os
+
+    scat.overwrite("t", spark.createDataFrame([("a", 1)], "k string, v int"))
+    df_a = spark.createDataFrame([("A", 2)], "k string, v int")
+    df_b = spark.createDataFrame([("B", 3)], "k string, v int")
+    real_link = os.link
+
+    def b_commits_first(src, dst):
+        monkeypatch.setattr(os, "link", real_link)
+        scat.append("t", df_b)
+        return real_link(src, dst)
+
+    monkeypatch.setattr(os, "link", b_commits_first)
+    with pytest.raises(ConcurrentWriteError, match="already committed"):
+        scat.append("t", df_a)
+
+    assert scat._version("t") == 2
+    assert {r["k"] for r in scat.read("t").collect()} == {"a", "B"}
+    on_disk, referenced = _units(scat, "t")
+    (unit_a,) = on_disk - referenced
+    assert [r["k"] for r in spark.read.parquet(
+        os.path.join(scat._dir("t"), unit_a)).collect()] == ["A"]
+    # A's temp manifest is gone; only the published manifests remain
+    assert sorted(os.listdir(os.path.join(scat._dir("t"), "snapshots"))) \
+        == ["v1.json", "v2.json"]
+
+
+def test_snapshot_commit_stress_no_lost_update(tmp_path):
+    """More writer threads than cores append-commit to one table,
+    re-reading the parent and retrying on ConcurrentWriteError: every
+    commit lands exactly once, so the final manifest holds every unit
+    (a lost update would drop one)."""
+    import sys
+    import threading
+
+    cat = SnapshotParquetCatalog(None, str(tmp_path / "wh"))
+    n_writers, per_writer = 8, 10
+    failures = []
+
+    def writer(w):
+        try:
+            for i in range(per_writer):
+                unit = {"path": f"data/{w}-{i}", "rows": 0, "stats": {}}
+                while True:
+                    parent = cat._version("t")
+                    prev = cat._snapshot("t", parent)
+                    units = (prev["units"] if prev else []) + [unit]
+                    try:
+                        cat._commit("t", parent, units, "append", "{}")
+                        break
+                    except ConcurrentWriteError:
+                        continue
+        except Exception as e:  # surfaced by the assert below
+            failures.append(e)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=writer, args=(w,))
+                   for w in range(n_writers)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads) and failures == []
+    final = cat._snapshot("t")
+    assert final["version"] == n_writers * per_writer
+    assert sorted(u["path"] for u in final["units"]) == sorted(
+        f"data/{w}-{i}" for w in range(n_writers) for i in range(per_writer)
+    )
 
 def test_snapshot_time_travel_and_isolation(spark, scat):
     df1 = spark.createDataFrame([("a", 1)], "k string, v int")
@@ -242,6 +353,11 @@ def test_snapshot_metadata_only_delete(spark, scat):
     pre = scat.read("hist", version=3)
     assert pre.count() == 8
 
+    # the listing is the version of record: expiring every manifest
+    # would reset the table to absent, so it is refused
+    with pytest.raises(ValueError, match="retain_last"):
+        scat.expire_snapshots("hist", retain_last=0)
+
     # expire: keep only the latest snapshot; orphaned units are GC'd
     res = scat.expire_snapshots("hist", retain_last=1)
     assert res["snapshots"] == 3 and res["units"] == 2
@@ -260,65 +376,6 @@ def test_snapshot_concurrent_write_detected(spark, scat):
     scat.append("t", df)  # version -> 2
     with pytest.raises(ConcurrentWriteError):
         scat._commit("t", parent, [unit], "append", df.schema.json())
-
-
-def test_snapshot_stalled_writer_does_not_silently_lose_commit(
-    spark, scat, monkeypatch
-):
-    """Round-4 advice race: writer A creates v2.json then stalls past the
-    grace window BEFORE flipping VERSION; writer B reclaims the slot and
-    commits. A's commit must RAISE (post-flip writer-id verify), never
-    report success while its units are gone."""
-    import json
-    import os
-
-    df = spark.createDataFrame([("a", 1)], "k string, v int")
-    scat.overwrite("t", df)
-    parent = scat._version("t")
-    unit_a = scat._write_unit(
-        "t", spark.createDataFrame([("A", 2)], "k string, v int")
-    )
-
-    orig_fdopen = os.fdopen
-    state = {}
-
-    def fdopen_then_stall(fd, *a, **k):
-        fh = orig_fdopen(fd, *a, **k)
-        if not state:  # first manifest write = writer A
-            state["armed"] = True
-
-            class _Wrapped:
-                def __enter__(self):
-                    return fh.__enter__()
-
-                def __exit__(self, *exc):
-                    r = fh.__exit__(*exc)
-                    # A "stalls": backdate its manifest past the grace
-                    # window, then B reclaims the slot and commits
-                    man = os.path.join(
-                        scat._dir("t"), "snapshots", "v2.json"
-                    )
-                    past = (os.path.getmtime(man)
-                            - scat.TORN_MANIFEST_GRACE_SEC - 1)
-                    os.utime(man, (past, past))
-                    monkeypatch.undo()
-                    scat.append(
-                        "t",
-                        spark.createDataFrame([("B", 3)],
-                                              "k string, v int"),
-                    )
-                    return r
-
-            return _Wrapped()
-        return fh
-
-    monkeypatch.setattr(os, "fdopen", fdopen_then_stall)
-    with pytest.raises(ConcurrentWriteError, match="reclaimed"):
-        scat._commit("t", parent, [unit_a], "append", df.schema.json())
-    # B's commit stands; A's units are not referenced
-    assert {r["k"] for r in scat.read("t").collect()} == {"a", "B"}
-    with open(os.path.join(scat._dir("t"), "snapshots", "v2.json")) as f:
-        assert json.load(f)["units"][-1]["path"] != unit_a["path"]
 
 
 def test_snapshot_merge_atomic_and_idempotent(spark, scat):

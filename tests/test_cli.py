@@ -185,6 +185,28 @@ def test_stream_dedup_command(spark, tmp_path, capsys, monkeypatch):
     assert spark.read.parquet(out).count() == n_before
 
 
+def test_stream_dedup_command_no_candidates(spark, tmp_path, capsys,
+                                            monkeypatch):
+    """An input with no documents (so no near-duplicates) drains without
+    running a batch: the sink holds only its metadata log and no data
+    file to infer a schema from. The candidate count is read back with
+    the sink's schema and is 0 instead of crashing."""
+    import json
+
+    monkeypatch.setenv("DCE_CLI_KEEP_SESSION", "1")
+    src = tmp_path / "docs_dir"
+    src.mkdir()
+    rc = cli.main([
+        "stream-dedup", "--input", str(src) + "/*",
+        "--schema", "doc_id bigint, text string",
+        "--out", str(tmp_path / "pairs_out"),
+        "--checkpoint", str(tmp_path / "sd_ckpt"),
+    ])
+    assert rc == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["candidate_rows"] == 0
+
+
 def test_sample_command(spark, tmp_path, capsys, monkeypatch):
     import json
 
@@ -274,5 +296,8 @@ def test_validate_snapshot_checkpoint_backend(spark, tmp_path, capsys,
     assert cli.main(args) == 0
     out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out2["status"] == "ALREADY_DONE"
-    # the checkpoint relation lives in the snapshot catalog's layout
-    assert (tmp_path / "snap_ckpt" / "checkpoints" / "VERSION").exists()
+    # the checkpoint relation lives in the snapshot catalog's layout:
+    # published manifests only, no pointer file
+    ckpt = tmp_path / "snap_ckpt" / "checkpoints"
+    assert (ckpt / "snapshots" / "v1.json").exists()
+    assert not (ckpt / "VERSION").exists()

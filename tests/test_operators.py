@@ -18,21 +18,6 @@ from data_contract_engine_spark.operators.drift import (
 )
 
 
-def test_salted_equals_unsalted(spark):
-    df = spark.range(1000).select(
-        (F.col("id") % 7).alias("k"), F.col("id").alias("v")
-    )
-    a = {
-        (r["k"],): r["dup_count"]
-        for r in uniq_op.duplicate_counts(df, "k", salted=True).collect()
-    }
-    b = {
-        (r["k"],): r["dup_count"]
-        for r in uniq_op.duplicate_counts(df, "k", salted=False).collect()
-    }
-    assert a == b and len(a) == 7
-
-
 def test_composite_duplicates(spark):
     df = spark.createDataFrame(
         [("c1", 0), ("c1", 0), ("c1", 1), ("c2", 0)], "conv_id string, turn_idx int"

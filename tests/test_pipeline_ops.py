@@ -84,11 +84,16 @@ def test_cosine_topk_and_variants(spark):
     top = similarity.cosine_topk(emb, [1.0, 0.0, 0.0], 2).collect()
     assert [r["vec_id"] for r in top] == [0, 1]
     assert top[0]["sim"] == pytest.approx(1.0)
-    # pandas scorer agrees with the JVM fold
-    ptop = similarity.cosine_topk_pandas(emb, [1.0, 0.0, 0.0], 2).collect()
-    assert [r["vec_id"] for r in ptop] == [0, 1]
-    for a, b in zip(top, ptop):
-        assert a["sim"] == pytest.approx(b["sim"], abs=1e-12)
+    # the Arrow scorer is bit-identical to the Column-HOF fold
+    q = [0.3, 0.5, -0.2]
+    arrow = similarity.cosine_topk(emb, q, 4).collect()
+    hof = emb.select(
+        "vec_id",
+        similarity.cosine(F.col("embedding"), similarity._lit_vec(q))
+        .alias("sim"),
+    ).orderBy(F.desc("sim"), "vec_id").collect()
+    assert [(r["vec_id"], r["sim"]) for r in arrow] == \
+        [(r["vec_id"], r["sim"]) for r in hof]
     # multi-query path
     qdf = spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],

@@ -386,6 +386,30 @@ def test_referential_table_vocabs_single_job(spark, monkeypatch):
     )
 
 
+def test_unresolvable_vocab_table_fails_loudly(spark):
+    """A referential rule whose vocabulary table neither the engine's
+    registry nor the Spark catalog knows raises on report() with Spark's
+    error naming the table, instead of passing with the rule skipped."""
+    from pyspark.errors import AnalysisException
+
+    contract = contract_from_dict(
+        {
+            "contract_version": "1.0",
+            "schema": {"id": {"type": "string"}},
+            "quality_rules": {
+                "referential": {
+                    "tool": {"table": "no_such_vocab", "column": "tool"},
+                }
+            },
+        }
+    )
+    df = spark.createDataFrame(
+        [("a", "search"), ("b", "hammer")], "id string, tool string"
+    )
+    run = ContractEngine(spark).validate(df, contract, key_columns=["id"])
+    with pytest.raises(AnalysisException, match="no_such_vocab"):
+        run.report()
+
 def test_multi_uniqueness_single_job(spark, monkeypatch):
     """k uniqueness keys → ONE collected GROUPING-SETS query; per-key
     results identical to the per-key duplicate_report path."""
@@ -414,9 +438,7 @@ def test_multi_uniqueness_single_job(spark, monkeypatch):
 
     for key in keys:
         label = key if isinstance(key, str) else ",".join(key)
-        assert fused[label] == uniq_op.duplicate_report(
-            df, key, salted=False
-        ), label
+        assert fused[label] == uniq_op.duplicate_report(df, key), label
     # NULL keys participate as values (reference parity), and the fused
     # path keeps that: (NULL, 4) is a duplicate composite key
     assert fused["conv_id,turn_idx"][0] == 2  # ('a',1) and (NULL,4)

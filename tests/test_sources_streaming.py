@@ -270,25 +270,6 @@ def test_layout_date_partition_pruning(spark, tmp_path):
     assert "PartitionFilters" in plan and "2025-05-02" in plan
 
 
-def test_merge_upsert(spark, tmp_path):
-    from data_contract_engine_spark.sources.sinks import merge_upsert
-
-    path = str(tmp_path / "metrics")
-    day1 = spark.createDataFrame(
-        [("c1", "2025-05-01", 10), ("c1", "2025-05-02", 5)],
-        "contract_id string, day string, total int",
-    )
-    merge_upsert(spark, path, day1, ["contract_id", "day"])
-    # re-aggregate day 2 with corrected numbers + add day 3
-    day2 = spark.createDataFrame(
-        [("c1", "2025-05-02", 7), ("c1", "2025-05-03", 3)],
-        "contract_id string, day string, total int",
-    )
-    merge_upsert(spark, path, day2, ["contract_id", "day"])
-    got = {r["day"]: r["total"] for r in spark.read.parquet(path).collect()}
-    assert got == {"2025-05-01": 10, "2025-05-02": 7, "2025-05-03": 3}
-
-
 def test_quarantine_sink(spark, tmp_path):
     from data_contract_engine_spark.sources.sinks import write_quarantine
 
