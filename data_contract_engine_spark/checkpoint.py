@@ -38,6 +38,7 @@ import time
 from dataclasses import dataclass
 from typing import List, Optional, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .contracts.model import Contract
@@ -67,10 +68,15 @@ class CheckpointStore:
         self.path = path
 
     def _read(self) -> Optional[DataFrame]:
+        """The checkpoint relation, or None when nothing was written yet.
+        Any other failure (unknown filesystem scheme, no access) raises:
+        an unreadable checkpoint must not read as "nothing done"."""
         try:
             return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
-        except Exception:
-            return None
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
 
     def done_partitions(self, run_id: str, lineage: str) -> List[str]:
         df = self._read()

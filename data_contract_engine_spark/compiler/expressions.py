@@ -1,12 +1,22 @@
 """Contract → vectorized Column-expression compiler (the engine core).
 
 Compiles a :class:`~data_contract_engine_spark.contracts.model.Contract`
-into ONE fused projection: every schema rule (required / type / pattern /
-format / length / enum / numeric range / timestamp bounds / array size /
-array items / nested object properties) becomes a ``when(...)``-guarded
-error-struct Column; all of them are assembled into an ordered array,
-null-filtered, and capped at ``max_errors`` per record — a single pass per
-partition with no per-row Python, fully inside WholeStageCodegen.
+into ONE fused projection. Every scalar schema rule (required / type /
+pattern / format / length / enum / numeric range / timestamp bounds /
+array size) is emitted exactly once, as a rule tuple
+``(error_type, condition, message, value, expected)`` in rule order
+(:func:`_field_rules`). :func:`compile_contract` derives everything from
+that single list:
+
+  * the error array: each rule becomes a ``when(condition, error struct)``
+    Column; the structs (plus the nested array-items / object-properties
+    errors) are assembled into an ordered array, null-filtered, and capped
+    at ``max_errors`` per record — a single pass per partition with no
+    per-row Python, fully inside WholeStageCodegen;
+  * the lean predicates ``(field, error_type, condition)`` used for
+    counting, and the ``passed`` verdict as NOT(any condition) — both only
+    when no field needs nested evaluation; otherwise ``passed`` is
+    ``size(errors) == 0``.
 
 Semantics ported from the reference interpreter
 (`app/core/schema_validator.py:25-368`):
@@ -38,7 +48,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field as dc_field
 from datetime import datetime
-from typing import List, Optional
+from functools import reduce
+from typing import List, Optional, Tuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -69,6 +80,11 @@ ERROR_STRUCT_TYPE = T.StructType(
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _FRACTIONAL = (T.FloatType, T.DoubleType, T.DecimalType)
 
+# One scalar rule: (error_type, condition, message, value, expected).
+# `message` / `value` / `expected` may be Columns; the field path is
+# supplied when the rule becomes an error struct (see _errors).
+Rule = Tuple[str, Column, object, object, object]
+
 
 @dataclass(frozen=True)
 class CompileOptions:
@@ -83,20 +99,22 @@ class CompiledContract:
     contract: Contract
     errors_col: Column
     passed_col: Column
-    declared_columns: List[str]
     options: CompileOptions = dc_field(default_factory=CompileOptions)
-    # Lean twin of the error array: [(field, error_type, bool Column)].
-    # The full error-struct tree is ~50x bigger (messages, format_string,
-    # truncation) and its higher-order functions don't codegen; counting /
-    # verdict jobs use these cheap predicates instead, and only the
-    # violations-artifact job pays for the full structs. None when the
-    # contract has nested array/object rules (counts then need the array).
+    # The rule list's conditions without the error structs:
+    # [(field, error_type, bool Column)], in rule order. The error-struct
+    # tree is ~50x bigger (messages, format_string, truncation) and its
+    # higher-order functions don't codegen; `passed_col` and the counting
+    # jobs use these instead, and only the violations-artifact job pays for
+    # the full structs. None when the contract has nested array/object rules
+    # (counts and `passed` then need the array).
     predicates: Optional[List] = None
 
 
-def _mkerr(field, error_type: str, message, value, expected) -> Column:
-    """Build one error struct. `field`/`message`/`value` may be Columns."""
-    fc = field if isinstance(field, Column) else F.lit(field)
+def _mkerr(path, rule: Rule) -> Column:
+    """The error struct `rule` emits at `path` (a str or a Column); its
+    condition is not part of the struct."""
+    error_type, _cond, message, value, expected = rule
+    fc = path if isinstance(path, Column) else F.lit(path)
     mc = message if isinstance(message, Column) else F.lit(message)
     if value is None:
         vc = F.lit(None).cast("string")
@@ -118,10 +136,11 @@ def _empty_errors() -> Column:
     return F.array().cast(ERROR_ARRAY_DDL)
 
 
-def _pack(checks: List[Column]) -> Column:
-    """Ordered array of nullable error structs → null-filtered error array."""
-    if not checks:
+def _errors(path, rules: List[Rule]) -> Column:
+    """Rules → null-filtered array<error-struct>, in rule order."""
+    if not rules:
         return _empty_errors()
+    checks = [F.when(rule[1], _mkerr(path, rule)) for rule in rules]
     return F.filter(F.array(*checks), lambda e: e.isNotNull())
 
 
@@ -188,238 +207,190 @@ def _parse_bound_ts(bound) -> datetime:
 
 
 # ---------------------------------------------------------------------------
-# per-type rule emitters — each returns [nullable error-struct Column, ...]
-# Every check is guarded so it only fires on non-null, type-valid values.
+# per-type rule emitters — each returns [Rule, ...] in rule order.
+# Every condition is guarded so it only fires on non-null, type-valid values.
 # ---------------------------------------------------------------------------
 
 
-def _string_checks(path, value: Column, fd: FieldDef, ok: Column) -> List[Column]:
-    out: List[Column] = []
+def _type_rule(fd: FieldDef, got: str, cond: Column, value: Optional[Column]) -> Rule:
+    """TYPE_MISMATCH; `value` None means the offending value is a NULL."""
+    return (
+        "TYPE_MISMATCH",
+        cond,
+        f"Expected {fd.type}, got {got}",
+        None if value is None else _trunc(value),
+        fd.type,
+    )
+
+
+def _missing_rule(what: str, name: str, cond: Column) -> Rule:
+    """REQUIRED_FIELD_MISSING for a required `field` / `property`."""
+    return (
+        "REQUIRED_FIELD_MISSING",
+        cond,
+        f"Required {what} '{name}' is missing",
+        None,
+        f"required {what}",
+    )
+
+
+def _enum_rule(value: Column, fd: FieldDef, ok: Column, shown: Column) -> Rule:
+    return (
+        "ENUM_MISMATCH",
+        ok & ~value.isin(*fd.enum),
+        f"Value not in allowed list: {list(fd.enum)}",
+        shown,
+        str(list(fd.enum)),
+    )
+
+
+def _string_rules(value: Column, fd: FieldDef, ok: Column) -> List[Rule]:
+    out: List[Rule] = []
     if fd.pattern:
-        out.append(
-            F.when(
-                ok & ~value.rlike(_anchor(fd.pattern)),
-                _mkerr(
-                    path,
-                    "PATTERN_MISMATCH",
-                    f"Value does not match pattern: {fd.pattern}",
-                    _trunc(value),
-                    fd.pattern,
-                ),
-            )
-        )
+        out.append((
+            "PATTERN_MISMATCH",
+            ok & ~value.rlike(_anchor(fd.pattern)),
+            f"Value does not match pattern: {fd.pattern}",
+            _trunc(value),
+            fd.pattern,
+        ))
     if fd.format:
-        regex = "(?i)" + FORMAT_REGEXES[fd.format]
-        out.append(
-            F.when(
-                ok & ~value.rlike(regex),
-                _mkerr(
-                    path,
-                    "FORMAT_MISMATCH",
-                    f"Value does not match format: {fd.format}",
-                    _trunc(value),
-                    fd.format,
-                ),
-            )
-        )
+        out.append((
+            "FORMAT_MISMATCH",
+            ok & ~value.rlike("(?i)" + FORMAT_REGEXES[fd.format]),
+            f"Value does not match format: {fd.format}",
+            _trunc(value),
+            fd.format,
+        ))
     if fd.min_length is not None:
-        out.append(
-            F.when(
-                ok & (F.length(value) < F.lit(fd.min_length)),
-                _mkerr(
-                    path,
-                    "LENGTH_TOO_SHORT",
-                    F.format_string(
-                        f"Length %d is less than minimum {fd.min_length}",
-                        F.length(value),
-                    ),
-                    _trunc(value),
-                    f"min_length: {fd.min_length}",
-                ),
-            )
-        )
+        out.append((
+            "LENGTH_TOO_SHORT",
+            ok & (F.length(value) < F.lit(fd.min_length)),
+            F.format_string(
+                f"Length %d is less than minimum {fd.min_length}", F.length(value)
+            ),
+            _trunc(value),
+            f"min_length: {fd.min_length}",
+        ))
     if fd.max_length is not None:
-        out.append(
-            F.when(
-                ok & (F.length(value) > F.lit(fd.max_length)),
-                _mkerr(
-                    path,
-                    "LENGTH_TOO_LONG",
-                    F.format_string(
-                        f"Length %d exceeds maximum {fd.max_length}",
-                        F.length(value),
-                    ),
-                    _trunc(value),
-                    f"max_length: {fd.max_length}",
-                ),
-            )
-        )
+        out.append((
+            "LENGTH_TOO_LONG",
+            ok & (F.length(value) > F.lit(fd.max_length)),
+            F.format_string(
+                f"Length %d exceeds maximum {fd.max_length}", F.length(value)
+            ),
+            _trunc(value),
+            f"max_length: {fd.max_length}",
+        ))
     if fd.enum:
-        out.append(
-            F.when(
-                ok & ~value.isin(*fd.enum),
-                _mkerr(
-                    path,
-                    "ENUM_MISMATCH",
-                    f"Value not in allowed list: {list(fd.enum)}",
-                    _trunc(value),
-                    str(list(fd.enum)),
-                ),
-            )
-        )
+        out.append(_enum_rule(value, fd, ok, _trunc(value)))
     return out
 
 
-def _number_checks(path, value: Column, fd: FieldDef, ok: Column) -> List[Column]:
-    out: List[Column] = []
-    if fd.min is not None:
-        out.append(
-            F.when(
-                ok & (value < F.lit(fd.min)),
-                _mkerr(
-                    path,
-                    "VALUE_TOO_SMALL",
-                    F.concat(
-                        F.lit("Value "),
-                        value.cast("string"),
-                        F.lit(f" is less than minimum {fd.min}"),
-                    ),
-                    value,
-                    f"min: {fd.min}",
+def _number_rules(value: Column, fd: FieldDef, ok: Column) -> List[Rule]:
+    out: List[Rule] = []
+    for et, key, bound, says in (
+        ("VALUE_TOO_SMALL", "min", fd.min, "is less than minimum"),
+        ("VALUE_TOO_LARGE", "max", fd.max, "exceeds maximum"),
+    ):
+        if bound is not None:
+            breach = value < F.lit(bound) if key == "min" else value > F.lit(bound)
+            out.append((
+                et,
+                ok & breach,
+                F.concat(
+                    F.lit("Value "), value.cast("string"), F.lit(f" {says} {bound}")
                 ),
-            )
-        )
-    if fd.max is not None:
-        out.append(
-            F.when(
-                ok & (value > F.lit(fd.max)),
-                _mkerr(
-                    path,
-                    "VALUE_TOO_LARGE",
-                    F.concat(
-                        F.lit("Value "),
-                        value.cast("string"),
-                        F.lit(f" exceeds maximum {fd.max}"),
-                    ),
-                    value,
-                    f"max: {fd.max}",
-                ),
-            )
-        )
+                value,
+                f"{key}: {bound}",
+            ))
     if fd.enum:
-        out.append(
-            F.when(
-                ok & ~value.isin(*fd.enum),
-                _mkerr(
-                    path,
-                    "ENUM_MISMATCH",
-                    f"Value not in allowed list: {list(fd.enum)}",
-                    value,
-                    str(list(fd.enum)),
-                ),
-            )
-        )
+        out.append(_enum_rule(value, fd, ok, value))
     return out
 
 
-def _timestamp_checks(
-    path, raw: Column, dtype: T.DataType, fd: FieldDef, ok: Column
-) -> List[Column]:
-    out: List[Column] = []
+def _timestamp_rules(
+    raw: Column, dtype: T.DataType, fd: FieldDef, ok: Column
+) -> List[Rule]:
+    out: List[Rule] = []
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
         parsed = raw
-        parse_fail = F.lit(False)
     elif isinstance(dtype, T.StringType):
         # ISO-8601 only for string inputs; numeric strings are NOT epoch
         # (the reference's epoch branch only fires for numeric Python types)
         parsed = raw.try_cast("timestamp")
-        parse_fail = ok & parsed.isNull()
+        out.append((
+            "INVALID_TIMESTAMP",
+            ok & parsed.isNull(),
+            "Cannot parse timestamp",
+            _trunc(raw),
+            "ISO 8601 or Unix timestamp",
+        ))
     else:  # numeric epoch seconds (schema_validator.py:208)
         parsed = F.timestamp_seconds(raw.cast("double"))
-        parse_fail = F.lit(False)
-
-    if isinstance(dtype, T.StringType):
-        out.append(
-            F.when(
-                parse_fail,
-                _mkerr(
-                    path,
-                    "INVALID_TIMESTAMP",
-                    "Cannot parse timestamp",
-                    _trunc(raw),
-                    "ISO 8601 or Unix timestamp",
-                ),
-            )
-        )
 
     bound_ok = ok & parsed.isNotNull()
     if fd.min:
-        lo = _parse_bound_ts(fd.min)
-        out.append(
-            F.when(
-                bound_ok & (parsed < F.lit(lo)),
-                _mkerr(
-                    path,
-                    "TIMESTAMP_TOO_OLD",
-                    f"Timestamp before minimum: {fd.min}",
-                    _trunc(raw),
-                    f"min: {fd.min}",
-                ),
-            )
-        )
+        out.append((
+            "TIMESTAMP_TOO_OLD",
+            bound_ok & (parsed < F.lit(_parse_bound_ts(fd.min))),
+            f"Timestamp before minimum: {fd.min}",
+            _trunc(raw),
+            f"min: {fd.min}",
+        ))
     if fd.max:
-        hi = _parse_bound_ts(fd.max)
-        out.append(
-            F.when(
-                bound_ok & (parsed > F.lit(hi)),
-                _mkerr(
-                    path,
-                    "TIMESTAMP_TOO_RECENT",
-                    f"Timestamp after maximum: {fd.max}",
-                    _trunc(raw),
-                    f"max: {fd.max}",
-                ),
-            )
-        )
+        out.append((
+            "TIMESTAMP_TOO_RECENT",
+            bound_ok & (parsed > F.lit(_parse_bound_ts(fd.max))),
+            f"Timestamp after maximum: {fd.max}",
+            _trunc(raw),
+            f"max: {fd.max}",
+        ))
     return out
+
+
+def _array_size_rules(value: Column, fd: FieldDef, ok: Column) -> List[Rule]:
+    out: List[Rule] = []
+    size = F.size(value)
+    for et, key, bound, says in (
+        ("ARRAY_TOO_SHORT", "min", fd.min, "less than minimum"),
+        ("ARRAY_TOO_LONG", "max", fd.max, "exceeds maximum"),
+    ):
+        if bound is not None:
+            n = F.lit(int(bound))
+            out.append((
+                et,
+                ok & (size < n if key == "min" else size > n),
+                F.format_string(f"Array length %d {says} {bound}", size),
+                F.format_string("[%d items]", size),
+                f"{key}: {bound}",
+            ))
+    return out
+
+
+def _nested_rules(value: Column, dtype: T.DataType, fd: FieldDef) -> List[Rule]:
+    """Rules for one nested value (array element / object property).
+
+    Parity with `_validate_nested_field` (schema_validator.py:336-353):
+    type check, then string / number rules only (object properties are
+    handled by :func:`_object_checks`)."""
+    nn = value.isNotNull()
+    if not _type_conforms(fd.type, dtype):
+        return [_type_rule(fd, _py_type_name(dtype), nn, value)]
+    if fd.type == "string":
+        return _string_rules(value, fd, nn)
+    if fd.type in ("integer", "float"):
+        return _number_rules(value, fd, nn)
+    return []
 
 
 def _nested_value_checks(
     path_col: Column, value: Column, dtype: T.DataType, fd: FieldDef
 ) -> Column:
-    """Checks for one nested value (array element / object property).
-
-    Parity with `_validate_nested_field` (schema_validator.py:336-353):
-    type check, then string / number / object rules only. Returns an
-    array<error-struct> Column (possibly empty).
-    """
-    checks: List[Column] = []
-    nn = value.isNotNull()
-
-    if not _type_conforms(fd.type, dtype):
-        got = _py_type_name(dtype)
-        checks.append(
-            F.when(
-                nn,
-                _mkerr(
-                    path_col,
-                    "TYPE_MISMATCH",
-                    f"Expected {fd.type}, got {got}",
-                    _trunc(value),
-                    fd.type,
-                ),
-            )
-        )
-        return _pack(checks)
-
-    ok = nn
-    if fd.type == "string":
-        checks.extend(_string_checks(path_col, value, fd, ok))
-    elif fd.type in ("integer", "float"):
-        checks.extend(_number_checks(path_col, value, fd, ok))
-    elif fd.type == "object":
+    """array<error-struct> (possibly empty) for one nested value."""
+    if fd.type == "object" and _type_conforms(fd.type, dtype):
         return _object_checks(path_col, value, dtype, fd)
-    return _pack(checks)
+    return _errors(path_col, _nested_rules(value, dtype, fd))
 
 
 def _object_checks(
@@ -435,33 +406,15 @@ def _object_checks(
         ppath = F.concat(path_col, F.lit(f".{pname}"))
         if pname not in by_name:
             if pdef.required:
-                parts.append(
-                    F.array(
-                        _mkerr(
-                            ppath,
-                            "REQUIRED_FIELD_MISSING",
-                            f"Required property '{pname}' is missing",
-                            None,
-                            "required property",
-                        )
-                    )
-                )
+                missing = _missing_rule("property", pname, None)
+                parts.append(F.array(_mkerr(ppath, missing)))
             continue
         pval = value.getField(pname)
-        pdtype = by_name[pname]
         missing = F.when(
             pval.isNull() & F.lit(pdef.required),
-            F.array(
-                _mkerr(
-                    ppath,
-                    "REQUIRED_FIELD_MISSING",
-                    f"Required property '{pname}' is missing",
-                    None,
-                    "required property",
-                )
-            ),
+            F.array(_mkerr(ppath, _missing_rule("property", pname, None))),
         ).otherwise(_empty_errors())
-        nested = _nested_value_checks(ppath, pval, pdtype, pdef)
+        nested = _nested_value_checks(ppath, pval, by_name[pname], pdef)
         parts.append(F.concat(missing, nested))
     if not parts:
         return _empty_errors()
@@ -475,8 +428,6 @@ def _array_item_errors(
 ) -> Column:
     """Validate the first 10 array elements (`schema_validator.py:293-301`),
     labelling errors `field[idx]`. Returns array<error-struct>."""
-    if fd.items is None:
-        return _empty_errors()
     elem_type = dtype.elementType
     items_def = fd.items
 
@@ -484,15 +435,7 @@ def _array_item_errors(
         p = F.concat(F.lit(path + "["), i.cast("string"), F.lit("]"))
         miss = F.when(
             x.isNull() & F.lit(items_def.required),
-            F.array(
-                _mkerr(
-                    p,
-                    "TYPE_MISMATCH",
-                    f"Expected {items_def.type}, got NoneType",
-                    None,
-                    items_def.type,
-                )
-            ),
+            F.array(_mkerr(p, _type_rule(items_def, "NoneType", None, None))),
         ).otherwise(_empty_errors())
         return F.concat(miss, _nested_value_checks(p, x, elem_type, items_def))
 
@@ -500,296 +443,70 @@ def _array_item_errors(
     return F.when(value.isNotNull(), nested).otherwise(_empty_errors())
 
 
-def _field_errors(
+def _field_rules(
     name: str, fd: FieldDef, dtype: Optional[T.DataType], opts: CompileOptions
-) -> Column:
-    """All error structs for one top-level declared field, in rule order.
-    Returns array<error-struct> (never null)."""
+) -> List[Rule]:
+    """The scalar rules of one top-level declared field, in rule order
+    (its array items / object properties: :func:`_nested_errors`)."""
     # column absent from the DataFrame entirely
     if dtype is None:
-        if fd.required:
-            return F.array(
-                _mkerr(
-                    name,
-                    "REQUIRED_FIELD_MISSING",
-                    f"Required field '{name}' is missing",
-                    None,
-                    "required field",
-                )
-            )
-        return _empty_errors()
+        return [_missing_rule("field", name, F.lit(True))] if fd.required else []
 
     v = F.col(name)
-    checks: List[Column] = []
-
+    rules: List[Rule] = []
     # required + NULL → canonical error (see module docstring)
     if fd.required:
         if opts.null_error_type == "TYPE_MISMATCH":
-            null_err = _mkerr(
-                name,
-                "TYPE_MISMATCH",
-                f"Expected {fd.type}, got NoneType",
-                None,
-                fd.type,
-            )
+            rules.append(_type_rule(fd, "NoneType", v.isNull(), None))
         else:
-            null_err = _mkerr(
-                name,
-                "REQUIRED_FIELD_MISSING",
-                f"Required field '{name}' is missing",
-                None,
-                "required field",
-            )
-        checks.append(F.when(v.isNull(), null_err))
+            rules.append(_missing_rule("field", name, v.isNull()))
 
-    stringly = isinstance(dtype, T.StringType) and fd.type not in (
-        "string",
-        "timestamp",
-        "date",
-    )
-    if not _type_conforms(fd.type, dtype) and not stringly:
-        # statically incompatible column: every non-null value mismatches
-        got = _py_type_name(dtype)
-        checks.append(
-            F.when(
-                v.isNotNull(),
-                _mkerr(
-                    name,
-                    "TYPE_MISMATCH",
-                    f"Expected {fd.type}, got {got}",
-                    _trunc(v),
-                    fd.type,
-                ),
-            )
-        )
-        return _pack(checks)
-
-    if stringly:
+    if isinstance(dtype, T.StringType) and fd.type in ("integer", "float", "boolean"):
         # string-typed source (CSV et al.): runtime cast failure ≡ the
         # reference's isinstance failure → TYPE_MISMATCH, got str
-        target = {
-            "integer": "long",
-            "float": "double",
-            "boolean": "boolean",
-        }.get(fd.type)
-        if target is None:
-            # array/object declared over a string column: unconditional mismatch
-            checks.append(
-                F.when(
-                    v.isNotNull(),
-                    _mkerr(
-                        name,
-                        "TYPE_MISMATCH",
-                        f"Expected {fd.type}, got str",
-                        _trunc(v),
-                        fd.type,
-                    ),
-                )
-            )
-            return _pack(checks)
-        typed = v.try_cast(target)
         if fd.type == "integer":
             # reject floats-with-fraction the way isinstance(int) does
+            d = v.try_cast("double")
             typed = F.when(
-                v.try_cast("double").isNotNull()
-                & (v.try_cast("double") == v.try_cast("double").cast("long").cast("double")),
-                v.try_cast("double").cast("long"),
+                d.isNotNull() & (d == d.cast("long").cast("double")), d.cast("long")
             )
-        cast_fail = v.isNotNull() & typed.isNull()
-        checks.append(
-            F.when(
-                cast_fail,
-                _mkerr(
-                    name,
-                    "TYPE_MISMATCH",
-                    f"Expected {fd.type}, got str",
-                    _trunc(v),
-                    fd.type,
-                ),
-            )
-        )
-        ok = v.isNotNull() & typed.isNotNull()
-        if fd.type in ("integer", "float"):
-            checks.extend(_number_checks(name, typed, fd, ok))
-        return _pack(checks)
-
-    ok = v.isNotNull()
-    if fd.type == "string":
-        checks.extend(_string_checks(name, v, fd, ok))
-        return _pack(checks)
-    if fd.type in ("integer", "float"):
-        val = v
-        if isinstance(dtype, T.BooleanType):  # unreachable (bool not conforming)
-            val = v.cast("int")
-        checks.extend(_number_checks(name, val, fd, ok))
-        return _pack(checks)
-    if fd.type == "timestamp":
-        checks.extend(_timestamp_checks(name, v, dtype, fd, ok))
-        return _pack(checks)
-    if fd.type == "array":
-        if fd.min is not None:
-            checks.append(
-                F.when(
-                    ok & (F.size(v) < F.lit(int(fd.min))),
-                    _mkerr(
-                        name,
-                        "ARRAY_TOO_SHORT",
-                        F.format_string(
-                            f"Array length %d less than minimum {fd.min}", F.size(v)
-                        ),
-                        F.format_string("[%d items]", F.size(v)),
-                        f"min: {fd.min}",
-                    ),
-                )
-            )
-        if fd.max is not None:
-            checks.append(
-                F.when(
-                    ok & (F.size(v) > F.lit(int(fd.max))),
-                    _mkerr(
-                        name,
-                        "ARRAY_TOO_LONG",
-                        F.format_string(
-                            f"Array length %d exceeds maximum {fd.max}", F.size(v)
-                        ),
-                        F.format_string("[%d items]", F.size(v)),
-                        f"max: {fd.max}",
-                    ),
-                )
-            )
-        scalar = _pack(checks)
-        items = _array_item_errors(name, v, dtype, fd)
-        return F.concat(scalar, items)
-    if fd.type == "object":
-        scalar = _pack(checks)
-        return F.concat(scalar, _object_checks(F.lit(name), v, dtype, fd))
-    # boolean / date: type check only
-    return _pack(checks)
-
-
-def _field_predicates(
-    name: str, fd: FieldDef, dtype: Optional[T.DataType], opts: CompileOptions
-) -> Optional[List]:
-    """[(field, error_type, condition)] for one top-level field — the lean
-    counting path. Must fire exactly when the corresponding error struct in
-    :func:`_field_errors` is non-null (pinned by the differential test).
-    Returns None when the field needs nested evaluation (array items /
-    object properties) — callers then fall back to the array path."""
-    if fd.type == "array" and fd.items is not None:
-        return None
-    if fd.type == "object" and fd.properties:
-        return None
-
-    out: List = []
-    if dtype is None:
-        if fd.required:
-            out.append((name, "REQUIRED_FIELD_MISSING", F.lit(True)))
-        return out
-
-    v = F.col(name)
-    if fd.required:
-        out.append((name, opts.null_error_type, v.isNull()))
-
-    stringly = isinstance(dtype, T.StringType) and fd.type not in (
-        "string",
-        "timestamp",
-        "date",
-    )
-    if not _type_conforms(fd.type, dtype) and not stringly:
-        out.append((name, "TYPE_MISMATCH", v.isNotNull()))
-        return out
-
-    if stringly:
-        target = {
-            "integer": "long",
-            "float": "double",
-            "boolean": "boolean",
-        }.get(fd.type)
-        if target is None:
-            out.append((name, "TYPE_MISMATCH", v.isNotNull()))
-            return out
-        typed = v.try_cast(target)
-        if fd.type == "integer":
-            typed = F.when(
-                v.try_cast("double").isNotNull()
-                & (
-                    v.try_cast("double")
-                    == v.try_cast("double").cast("long").cast("double")
-                ),
-                v.try_cast("double").cast("long"),
-            )
-        out.append((name, "TYPE_MISMATCH", v.isNotNull() & typed.isNull()))
-        ok = v.isNotNull() & typed.isNotNull()
-        if fd.type in ("integer", "float"):
-            if fd.min is not None:
-                out.append((name, "VALUE_TOO_SMALL", ok & (typed < F.lit(fd.min))))
-            if fd.max is not None:
-                out.append((name, "VALUE_TOO_LARGE", ok & (typed > F.lit(fd.max))))
-            if fd.enum:
-                out.append((name, "ENUM_MISMATCH", ok & ~typed.isin(*fd.enum)))
-        return out
-
-    ok = v.isNotNull()
-    if fd.type == "string":
-        if fd.pattern:
-            out.append((name, "PATTERN_MISMATCH", ok & ~v.rlike(_anchor(fd.pattern))))
-        if fd.format:
-            out.append(
-                (
-                    name,
-                    "FORMAT_MISMATCH",
-                    ok & ~v.rlike("(?i)" + FORMAT_REGEXES[fd.format]),
-                )
-            )
-        if fd.min_length is not None:
-            out.append(
-                (name, "LENGTH_TOO_SHORT", ok & (F.length(v) < F.lit(fd.min_length)))
-            )
-        if fd.max_length is not None:
-            out.append(
-                (name, "LENGTH_TOO_LONG", ok & (F.length(v) > F.lit(fd.max_length)))
-            )
-        if fd.enum:
-            out.append((name, "ENUM_MISMATCH", ok & ~v.isin(*fd.enum)))
-    elif fd.type in ("integer", "float"):
-        if fd.min is not None:
-            out.append((name, "VALUE_TOO_SMALL", ok & (v < F.lit(fd.min))))
-        if fd.max is not None:
-            out.append((name, "VALUE_TOO_LARGE", ok & (v > F.lit(fd.max))))
-        if fd.enum:
-            out.append((name, "ENUM_MISMATCH", ok & ~v.isin(*fd.enum)))
-    elif fd.type == "timestamp":
-        if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
-            parsed = v
-        elif isinstance(dtype, T.StringType):
-            parsed = v.try_cast("timestamp")
-            out.append((name, "INVALID_TIMESTAMP", ok & parsed.isNull()))
         else:
-            parsed = F.timestamp_seconds(v.cast("double"))
-        bok = ok & parsed.isNotNull()
-        if fd.min:
-            out.append(
-                (
-                    name,
-                    "TIMESTAMP_TOO_OLD",
-                    bok & (parsed < F.lit(_parse_bound_ts(fd.min))),
-                )
-            )
-        if fd.max:
-            out.append(
-                (
-                    name,
-                    "TIMESTAMP_TOO_RECENT",
-                    bok & (parsed > F.lit(_parse_bound_ts(fd.max))),
-                )
-            )
+            typed = v.try_cast("double" if fd.type == "float" else "boolean")
+        rules.append(_type_rule(fd, "str", v.isNotNull() & typed.isNull(), v))
+        if fd.type != "boolean":
+            rules += _number_rules(typed, fd, v.isNotNull() & typed.isNotNull())
+        return rules
+
+    if not _type_conforms(fd.type, dtype):
+        # statically incompatible column: every non-null value mismatches
+        rules.append(_type_rule(fd, _py_type_name(dtype), v.isNotNull(), v))
+        return rules
+
+    ok = v.isNotNull()
+    if fd.type == "string":
+        rules += _string_rules(v, fd, ok)
+    elif fd.type in ("integer", "float"):
+        rules += _number_rules(v, fd, ok)
+    elif fd.type == "timestamp":
+        rules += _timestamp_rules(v, dtype, fd, ok)
     elif fd.type == "array":
-        if fd.min is not None:
-            out.append((name, "ARRAY_TOO_SHORT", ok & (F.size(v) < F.lit(int(fd.min)))))
-        if fd.max is not None:
-            out.append((name, "ARRAY_TOO_LONG", ok & (F.size(v) > F.lit(int(fd.max)))))
-    # boolean / date: type check only (handled above)
-    return out
+        rules += _array_size_rules(v, fd, ok)
+    # boolean / date / object: type check only
+    return rules
+
+
+def _nested_errors(
+    name: str, fd: FieldDef, dtype: Optional[T.DataType]
+) -> Optional[Column]:
+    """array<error-struct> of a conforming field's array items / object
+    properties, or None when the field declares neither."""
+    if dtype is None or not _type_conforms(fd.type, dtype):
+        return None
+    if fd.type == "array" and fd.items is not None:
+        return _array_item_errors(name, F.col(name), dtype, fd)
+    if fd.type == "object" and fd.properties:
+        return _object_checks(F.lit(name), F.col(name), dtype, fd)
+    return None
 
 
 def compile_contract(
@@ -797,7 +514,8 @@ def compile_contract(
     df_schema: T.StructType,
     options: Optional[CompileOptions] = None,
 ) -> CompiledContract:
-    """Compile all P1–P14 rules (SURVEY.md §2.2) into one errors Column.
+    """Compile all P1–P14 rules (SURVEY.md §2.2) into one errors Column,
+    the lean predicates and the `passed` Column — all from one rule list.
 
     The result is meant to be used as::
 
@@ -810,10 +528,19 @@ def compile_contract(
     opts = options or CompileOptions()
     by_name = {f.name: f.dataType for f in df_schema.fields}
 
-    per_field = [
-        _field_errors(name, fd, by_name.get(name), opts)
-        for name, fd in contract.fields
-    ]
+    per_field = []
+    predicates: Optional[List] = []
+    for name, fd in contract.fields:
+        dtype = by_name.get(name)
+        rules = _field_rules(name, fd, dtype, opts)
+        errs = _errors(name, rules)
+        nested = _nested_errors(name, fd, dtype)
+        per_field.append(errs if nested is None else F.concat(errs, nested))
+        if nested is not None:
+            predicates = None
+        elif predicates is not None:
+            predicates += [(name, rule[0], rule[1]) for rule in rules]
+
     if not per_field:
         errors = _empty_errors()
     elif len(per_field) == 1:
@@ -821,23 +548,18 @@ def compile_contract(
     else:
         errors = F.concat(*per_field)
     errors = F.slice(errors, 1, opts.max_errors)
-    passed = F.size(errors) == 0
+    if predicates is None:
+        passed = F.size(errors) == 0
+    else:
+        any_rule = reduce(
+            lambda a, b: a | b, [c for _, _, c in predicates], F.lit(False)
+        )
+        passed = ~F.coalesce(any_rule, F.lit(False))
 
-    # lean predicate twin (None disables it if any field needs nesting)
-    predicates: Optional[List] = []
-    for name, fd in contract.fields:
-        ps = _field_predicates(name, fd, by_name.get(name), opts)
-        if ps is None:
-            predicates = None
-            break
-        predicates.extend(ps)
-
-    declared = [n for n, _ in contract.fields if n in by_name]
     return CompiledContract(
         contract=contract,
         errors_col=errors,
         passed_col=passed,
-        declared_columns=declared,
         options=opts,
         predicates=predicates,
     )

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import time
 import uuid
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, replace
 from typing import Any, Dict, List, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -64,6 +64,42 @@ class BatchReport:
     quality: Optional[QualityResult]
     execution_time_ms: float
     total_violation_rows: int = 0
+
+
+def _lean_error_counts(predicates, max_errors: int) -> List:
+    """Per-error-type sums of the lean predicates, plus ``__over_cap``: the
+    number of records failing more than ``max_errors`` rules. The error
+    array keeps only a record's first ``max_errors`` errors, so the sums
+    equal the written violation rows exactly when ``__over_cap`` is 0;
+    otherwise the report recounts from the array (``_finish_report``).
+    Counting the cut in rule order here instead needs a running sum per
+    rule (measured on a 4-core host): shared running sums ran out of heap
+    at 36 rules, and unshared ones grow the expression quadratically (~6x
+    the planning time at 36 rules; past Spark's 64 KB generated-method
+    limit at 120 rules)."""
+    sums: Dict[str, Any] = {}
+    total = F.lit(0)
+    for _f, et, cond in predicates:
+        hit = F.when(cond, F.lit(1)).otherwise(F.lit(0))
+        sums[et] = sums[et] + hit if et in sums else hit
+        total = total + hit
+    return [F.sum(s).alias(f"__errtype__{et}") for et, s in sums.items()] + [
+        F.sum(F.when(total > max_errors, 1).otherwise(0)).alias("__over_cap")
+    ]
+
+
+def _array_error_counts(errors_column: str) -> List:
+    """Per-error-type counts from the (capped) error-struct array."""
+    return [
+        F.sum(
+            F.size(
+                F.filter(
+                    F.col(errors_column), lambda e: e["error_type"] == F.lit(et)
+                )
+            ).cast("long")
+        ).alias(f"__errtype__{et}")
+        for et in SCHEMA_ERROR_TYPES
+    ]
 
 
 @dataclass
@@ -193,37 +229,11 @@ class ValidationRun:
             F.sum(F.col("passed").cast("long")).alias("__passed"),
         ]
         if self.compiled.predicates is not None:
-            # lean path: per-error-type counts from the boolean predicates
-            # (codegen'd sums; note these are uncapped true counts, whereas
-            # the array path observes the 10-errors/record cap)
-            by_type: Dict[str, List] = {}
-            for _f, et, cond in self.compiled.predicates:
-                by_type.setdefault(et, []).append(cond.cast("long"))
-            total_err = None
-            for et, conds in by_type.items():
-                s = conds[0]
-                for c in conds[1:]:
-                    s = s + c
-                agg_exprs.append(F.sum(s).alias(f"__errtype__{et}"))
-                total_err = s if total_err is None else total_err + s
-            agg_exprs.append(
-                F.sum(
-                    total_err if total_err is not None else F.lit(0)
-                ).alias("__total_errors")
+            agg_exprs += _lean_error_counts(
+                self.compiled.predicates, self.compiled.options.max_errors
             )
         else:
-            agg_exprs += [
-                F.sum(F.size(F.col(ec)).cast("long")).alias("__total_errors")
-            ] + [
-                F.sum(
-                    F.size(
-                        F.filter(
-                            F.col(ec), lambda e: e["error_type"] == F.lit(et)
-                        )
-                    ).cast("long")
-                ).alias(f"__errtype__{et}")
-                for et in SCHEMA_ERROR_TYPES
-            ]
+            agg_exprs += _array_error_counts(ec)
         quality_exprs = build_quality_agg_exprs(self.df, rules)
         if drift_edges:
             quality_exprs += drift_op.multi_histogram_exprs(
@@ -272,14 +282,7 @@ class ValidationRun:
         exprs = self._agg_exprs(drift_exprs, drift_edges, drift_cats)
         obs = Observation(f"contract:{self.contract.name}")
         observed = self.validated.observe(obs, *exprs)
-        run_like = ValidationRun(
-            engine=self.engine,
-            contract=self.contract,
-            df=self.df,
-            compiled=self.compiled,
-            key_columns=self.key_columns,
-            validated=observed,
-        )
+        run_like = replace(self, validated=observed, _report=None)
         from .sources import sinks as _sinks  # local import avoids cycle
 
         _sinks.write_violations(
@@ -301,8 +304,18 @@ class ValidationRun:
         failed = total - passed
         pass_rate = (passed / total * 100.0) if total else 0.0
 
-        # ---- error summary decoded from the fused agg; samples are the
-        # only remaining (gated) extra job
+        if agg_row.get("__over_cap"):
+            # a record failed more than max_errors rules, and the lean sums
+            # also count the errors its array cuts: recount the failed
+            # records from the array itself (an extra job only in this case)
+            agg_row.update(
+                self._failed_with_errors()
+                .agg(*_array_error_counts(ec))
+                .collect()[0]
+                .asDict()
+            )
+        # ---- error summary decoded from the fused agg; the recount above
+        # and the samples below are the only (gated) extra jobs
         errors_summary: Dict[str, int] = {
             et: agg_row[f"__errtype__{et}"]
             for et in SCHEMA_ERROR_TYPES
@@ -367,7 +380,8 @@ class ValidationRun:
             sample_errors=samples,
             quality=quality,
             execution_time_ms=(time.time() - t0) * 1000.0,
-            total_violation_rows=agg_row.get("__total_errors") or 0,
+            # every violation row has exactly one schema error type
+            total_violation_rows=sum(errors_summary.values()),
         )
 
     # -- quality sub-operators -------------------------------------------
@@ -569,20 +583,12 @@ class ContractEngine:
         ]
         ec = self.compile_options.errors_column
         if compiled.predicates is not None:
-            # lean path: `passed` from the boolean predicate twin — tiny
-            # expression tree (fast planning per job, full codegen, no
-            # array allocation); the error-struct array is only attached in
-            # the violations/sample jobs (see _failed_with_errors)
-            from functools import reduce as _reduce
-
-            any_fail = _reduce(
-                lambda a, b: a | b,
-                [c for _, _, c in compiled.predicates],
-                F.lit(False),
-            )
+            # lean path: `passed` from the rule conditions — tiny expression
+            # tree (fast planning per job, full codegen, no array
+            # allocation); the error-struct array is only attached in the
+            # violations/sample jobs (see _failed_with_errors)
             validated = df.withColumn(
-                self.compile_options.passed_column,
-                ~F.coalesce(any_fail, F.lit(False)),
+                self.compile_options.passed_column, compiled.passed_col
             )
         else:
             # nested contracts: two-layer projection so the error-array

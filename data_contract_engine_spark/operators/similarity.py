@@ -85,6 +85,23 @@ def cosine(a: Column, b: Column) -> Column:
 # --------------------------------------------------------------------------
 
 
+def _stack_vectors(series: pd.Series, dim: int, who: str):
+    """One Arrow batch of array values → the float64 rows×``dim`` matrix
+    every fold-exact scorer walks. Raises ValueError for a NULL vector and
+    for any width other than ``dim``: a wider vector would otherwise fold
+    only its first ``dim`` elements and silently return a WRONG score."""
+    import numpy as np
+
+    if series.isna().any():
+        raise ValueError(f"{who}: null embedding vector")
+    widths = {len(v) for v in series}
+    if widths != {dim}:
+        raise ValueError(
+            f"{who}: expected vectors of width {dim}, got widths {sorted(widths)}"
+        )
+    return np.stack(series.to_numpy()).astype("float64", copy=False)
+
+
 def pair_dot_pandas(dim: int):
     """Arrow-batched dot product of two array columns, fold-exact (see
     block comment above). Inputs must be non-null ``dim``-width arrays;
@@ -97,15 +114,8 @@ def pair_dot_pandas(dim: int):
     def _dot(a: pd.Series, b: pd.Series) -> pd.Series:
         if len(a) == 0:
             return pd.Series([], dtype="float64")
-        A = np.stack(a.to_numpy()).astype("float64", copy=False)
-        B = np.stack(b.to_numpy()).astype("float64", copy=False)
-        if A.shape[1] != dim or B.shape[1] != dim:
-            # loud, not silent: a wider vector would otherwise fold only
-            # its first `dim` elements and return a WRONG dot product
-            raise ValueError(
-                f"pair_dot_pandas(dim={dim}) got vectors of width "
-                f"{A.shape[1]}/{B.shape[1]}"
-            )
+        A = _stack_vectors(a, dim, f"pair_dot_pandas(dim={dim})")
+        B = _stack_vectors(b, dim, f"pair_dot_pandas(dim={dim})")
         acc = np.zeros(len(A), dtype="float64")
         for i in range(dim):
             acc = acc + A[:, i] * B[:, i]
@@ -139,12 +149,7 @@ def query_cosine_pandas(query_vec: Sequence[float]):
     def _score(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="float64")
-        M = np.stack(v.to_numpy()).astype("float64", copy=False)
-        if M.shape[1] != dim:
-            raise ValueError(
-                f"query_cosine_pandas: query dim {dim} != vector width "
-                f"{M.shape[1]}"
-            )
+        M = _stack_vectors(v, dim, "query_cosine_pandas")
         acc = np.zeros(len(M), dtype="float64")
         nrm = np.zeros(len(M), dtype="float64")
         for i in range(dim):
@@ -186,14 +191,7 @@ def band_buckets_pandas(
     def _buckets(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="object")
-        M = np.stack(v.to_numpy()).astype("float64", copy=False)
-        if M.shape[1] != dim:
-            # a wrong plane width would silently bucket on a prefix —
-            # the exact failure mode the mandatory dim= exists to stop
-            raise ValueError(
-                f"band_buckets_pandas(dim={dim}) got vectors of width "
-                f"{M.shape[1]}"
-            )
+        M = _stack_vectors(v, dim, f"band_buckets_pandas(dim={dim})")
         acc = np.zeros((len(M), planes), dtype="float64")
         for i in range(dim):
             acc = acc + M[:, i : i + 1] * P[i : i + 1, :]
@@ -302,9 +300,7 @@ def cosine_topk_multi_pandas(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(
-                "float64", copy=False
-            )
+            M = _stack_vectors(pdf[vec_col], dim, "cosine_topk_multi_pandas")
             acc = np.zeros((len(M), nq), dtype="float64")
             nrm = np.zeros(len(M), dtype="float64")
             for i in range(dim):

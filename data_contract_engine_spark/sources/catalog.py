@@ -42,6 +42,7 @@ import os
 import re
 from typing import Optional, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 _MANIFEST_RE = re.compile(r"v(\d+)\.json")
@@ -133,10 +134,14 @@ class IcebergCatalog(TableCatalog):
         df.writeTo(self.qualified(table)).createOrReplace()
 
     def read(self, table: str) -> Optional[DataFrame]:
+        """The table, or None when it does not exist (any other failure
+        raises)."""
         try:
             return self.spark.table(self.qualified(table))
-        except Exception:
-            return None
+        except AnalysisException as e:
+            if e.getCondition() == "TABLE_OR_VIEW_NOT_FOUND":
+                return None
+            raise
 
     def merge(self, table: str, updates: DataFrame, keys: Sequence[str]) -> None:
         view = f"__merge_src_{table.replace('.', '_')}"

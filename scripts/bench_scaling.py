@@ -1,18 +1,25 @@
-"""Scaling-efficiency evidence: the SAME full-contract-suite job at two
-parallelism levels (local[8] = N, local[32] = 4N) over the same input.
+"""Scaling-efficiency evidence: the SAME production job
+(``ValidationRun.execute``: violations write + fused aggregates, plus the
+uniqueness / referential / drift jobs) at three local parallelism levels
+N, 2N, 4N over the same input, where 4N is the host's core count
+(the CPUs this process may run on, as `nproc` reports; a 4-core host runs
+local[1], local[2], local[4]).
 
-No real cluster exists in this sandbox, so per BASELINE.md the N→4N
-executor-scaling criterion is evidenced with local parallelism levels:
+The N→4N executor-scaling criterion is evidenced with local parallelism
+levels (BASELINE.md):
   efficiency = (throughput_4N / throughput_N) / 4     (target ≥ 0.8)
 
-Usage: python scripts/bench_scaling.py [n_convs] [--quick]
-Writes BENCH.md at the repo root.
+Usage: python scripts/bench_scaling.py [n_convs]
+  env DCE_SCALE_DATA=<parquet dir> reuses generated input.
+Writes the scaling section of BENCH.md and merges its result (with the
+host's core count) into BENCH_SCALING.json.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -28,6 +35,7 @@ from data_contract_engine_spark.fixtures.transcripts import FLAGSHIP_CONTRACT_YA
 
 cpus = int(sys.argv[1])
 data_path = sys.argv[2]
+out_dir = sys.argv[3]
 # small file splits: enough balanced tasks at every parallelism level (a
 # 577MB input at the default 128MB splits gives ~9 tasks — straggler-bound)
 spark = build_session(app_name=f"scale-{{cpus}}", master=f"local[{{cpus}}]",
@@ -45,7 +53,8 @@ snap = baseline_snapshot(
 
 # warmup: JIT + codegen + python workers + parquet footers (not counted)
 eng = ContractEngine(spark, drift_baseline_snapshot=snap)
-eng.validate(tr.limit(2000), contract, key_columns=["conv_id","turn_idx"]).report()
+eng.validate(tr.limit(2000), contract, key_columns=["conv_id","turn_idx"]).execute(
+    os.path.join(out_dir, "warmup"))
 
 # min of 3 back-to-back runs: the host is shared, and a background
 # hiccup in any single trial otherwise lands in the efficiency ratio
@@ -55,7 +64,7 @@ for _ in range(3):
     t0 = time.time()
     run = ContractEngine(spark, drift_baseline_snapshot=snap).validate(
         tr, contract, key_columns=["conv_id", "turn_idx"])
-    rep = run.report()
+    rep = run.execute(os.path.join(out_dir, "violations"))
     w = time.time() - t0
     wall = w if wall is None else min(wall, w)
 print(json.dumps({{"cpus": cpus, "wall_sec": round(wall, 3),
@@ -68,7 +77,10 @@ spark.stop()
 
 
 def main():
-    n_convs = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 50000
+    n_convs = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 60000
+    cores = len(os.sched_getaffinity(0))  # what `nproc` reports
+    base = max(1, cores // 4)
+    levels = (base, 2 * base, 4 * base)
     reuse = os.environ.get("DCE_SCALE_DATA")
     workdir = tempfile.mkdtemp(prefix="dce_scale_")
     data_path = reuse or os.path.join(workdir, "transcripts")
@@ -79,7 +91,7 @@ def main():
 import sys; sys.path.insert(0, {REPO!r})
 from data_contract_engine_spark import build_session
 from data_contract_engine_spark.fixtures.transcripts import transcripts_df
-spark = build_session(app_name="gen", master="local[32]", shuffle_partitions=32)
+spark = build_session(app_name="gen", master="local[{cores}]", shuffle_partitions={cores})
 df = transcripts_df(spark, n_convs={n_convs}, seed=42)
 df.repartition(64).write.mode("overwrite").parquet({data_path!r})
 print("rows:", spark.read.parquet({data_path!r}).count())
@@ -93,54 +105,52 @@ spark.stop()
 
     worker_src = WORKER.format(repo=REPO)
     results = {}
-    for cpus in (2, 8, 32):
-        print(f"running full contract suite at local[{cpus}] ...", flush=True)
+    for cpus in levels:
+        print(f"running execute() at local[{cpus}] ...", flush=True)
+        out_dir = os.path.join(workdir, f"out{cpus}")
         out = subprocess.run(
-            [sys.executable, "-c", worker_src, str(cpus), data_path],
+            [sys.executable, "-c", worker_src, str(cpus), data_path, out_dir],
             check=True, capture_output=True, text=True,
         )
+        shutil.rmtree(out_dir, ignore_errors=True)
         line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
         results[cpus] = json.loads(line)
         print(" ", line, flush=True)
 
-    t2, t8, t32 = (results[c]["turns_per_sec"] for c in (2, 8, 32))
-    eff28 = (t8 / t2) / 4.0
-    eff832 = (t32 / t8) / 4.0
+    n, n2, n4 = levels
+    tn, tn2, tn4 = (results[c]["turns_per_sec"] for c in levels)
+    eff = (tn4 / tn) / 4.0
+    rows = "\n".join(
+        f"| local[{c}] | {results[c]['wall_sec']} | {results[c]['turns_per_sec']:,.0f} |"
+        for c in levels
+    )
     md = f"""# BENCH — throughput & scaling efficiency
 
-Full contract suite (schema rules + freshness/completeness/statistics +
-salted uniqueness + referential + PSI/KL drift w/ precomputed baseline
-snapshot) over a deterministic synthetic transcripts table
-({results[8]['turns']:,} turns, seed=42, ~1% hot conversations), read from
-parquet with 8MB file splits (>4 balanced tasks per core at every level). Same input, same job, three parallelism
-levels (sandbox stand-in for executor counts per BASELINE.md). Wall time
-is the MIN of 3 back-to-back runs per level (steady-state; a single-trial
-methodology showed ±8% host-interference noise between runs).
+`ValidationRun.execute()` with the flagship contract (schema rules written
+as violation rows + freshness/completeness/statistics + uniqueness +
+referential + PSI/KL drift w/ precomputed baseline snapshot) over a
+deterministic synthetic transcripts table ({results[n4]['turns']:,} turns,
+seed=42, ~1% hot conversations), read from parquet with 8MB file splits.
+Same input, same job, three parallelism levels on a {cores}-core host
+(the stand-in for executor counts per BASELINE.md). Wall time is the MIN
+of 3 back-to-back runs per level (the host is shared; the minimum is the
+least-interfered run).
 
 | parallelism | wall (s) | validated turns/sec |
 |---|---|---|
-| local[2]  | {results[2]['wall_sec']} | {t2:,.0f} |
-| local[8]  | {results[8]['wall_sec']} | {t8:,.0f} |
-| local[32] | {results[32]['wall_sec']} | {t32:,.0f} |
+{rows}
 
-**N→4N scaling efficiency (local[2] → local[8]) =
-({t8:,.0f} / {t2:,.0f}) / 4 = {eff28:.3f}** (target >= 0.8)
+**N→4N scaling efficiency (local[{n}] → local[{n4}]) =
+({tn4:,.0f} / {tn:,.0f}) / 4 = {eff:.3f}** (target >= 0.8)
 
-Secondary pair local[8] → local[32]: {eff832:.3f}. This pair is bounded by
-the host topology, not the engine: the container exposes 32 logical CPUs =
-16 physical cores with SMT-2; a raw CPU-spin probe (no Spark) scales only
-3.1x from 8 to 32 workers (= 0.78 "efficiency" on pure arithmetic). The
-local[2] → local[8] pair runs entirely on distinct physical cores and is
-the faithful stand-in for adding executors to a cluster.
-
-Violations found: {results[8]['violations']:,} (identical at all levels);
-quality score: {results[8]['quality_score']}.
+Violations written: {results[n4]['violations']:,} (identical at all
+levels); quality score: {results[n4]['quality_score']}.
 
 Reference single-node baseline: ~8,850 records/s single-core
-(`TEST_RESULTS.md:311`); this engine: {t2:,.0f} turns/s on 2 cores,
-{t32:,.0f} on 32 logical cores, on a heavier rule set (regex + enum +
-timestamp rules plus uniqueness/referential/drift aggregates the reference
-runs separately or not at all).
+(`TEST_RESULTS.md:311`); this engine: {tn:,.0f} turns/s at local[{n}], on
+a heavier rule set (regex + enum + timestamp rules plus
+uniqueness/referential/drift aggregates the reference runs separately or
+not at all).
 """
     # regenerate only the scaling section; keep every manually-maintained
     # section below the marker (asymptote table, headline bench, skew)
@@ -156,10 +166,6 @@ runs separately or not at all).
     with open(bench_path, "w") as f:
         f.write(md + "\n" + MANUAL_MARK + manual)
     print(md)
-    summary = {"efficiency_2_to_8": round(eff28, 3),
-               "efficiency_8_to_32": round(eff832, 3),
-               "t2": t2, "t8": t8, "t32": t32}
-    print(json.dumps(summary))
     # single source of truth for measured evidence: bench.py embeds this
     # artifact instead of hardcoding numbers that would go stale. Merge
     # into the existing file: keys owned by other scripts (e.g. the
@@ -171,14 +177,19 @@ runs separately or not at all).
     except (OSError, ValueError):
         artifact = {}
     artifact.update({
-        "pair": "local[2] -> local[8]",
-        "efficiency_n_to_4n": round(eff28, 3),
-        "turns_per_sec": {"local2": t2, "local8": t8, "local32": t32},
-        "turns": results[8]["turns"],
+        "pair": f"local[{n}] -> local[{n4}]",
+        "efficiency_n_to_4n": round(eff, 3),
+        "turns_per_sec": {f"local{c}": results[c]["turns_per_sec"] for c in levels},
+        "turns": results[n4]["turns"],
+        "host_cores": cores,
+        "timed": "ValidationRun.execute, min of 3 runs per level",
         "source": "scripts/bench_scaling.py",
     })
     with open(art_path, "w") as f:
         json.dump(artifact, f, indent=1)
+    print(json.dumps({k: artifact[k] for k in ("pair", "efficiency_n_to_4n", "host_cores")}))
+    if not reuse:
+        shutil.rmtree(workdir, ignore_errors=True)
 
 
 if __name__ == "__main__":

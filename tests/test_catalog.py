@@ -140,6 +140,17 @@ def test_iceberg_merge_sql_key_only_table(spark):
     assert "WHEN NOT MATCHED THEN INSERT (k) VALUES (s.k)" in sql
 
 
+
+def test_iceberg_read_maps_only_a_missing_table_to_none(spark):
+    """read() returns None for a table that does not exist; a name the
+    catalog cannot resolve at all raises instead of reading as absent."""
+    from pyspark.errors import AnalysisException
+
+    cat = IcebergCatalog(spark, catalog="spark_catalog", namespace="default")
+    assert cat.read("no_such_table") is None
+    with pytest.raises(AnalysisException, match="REQUIRES_SINGLE_PART_NAMESPACE"):
+        IcebergCatalog(spark, catalog="nosuchcat", namespace="dce").read("t")
+
 # ---------------------------------------------------------------------------
 # SnapshotParquetCatalog-specific guarantees (the Iceberg storage model
 # rebuilt on parquet + JSON manifests)

@@ -82,6 +82,22 @@ def test_lineage_change_invalidates(spark, data, tmp_path):
     assert r.skipped == 0 and r.validated_now == 4
 
 
+
+def test_unreadable_checkpoint_raises_before_validating(spark, data, monkeypatch):
+    """A checkpoint path that cannot be read (a filesystem scheme no Hadoop
+    FileSystem serves) raises from validate_resumable before any partition
+    is validated: it must not read as "nothing done yet"."""
+    eng = ContractEngine(spark)
+    validated = []
+    monkeypatch.setattr(eng, "validate", lambda *a, **k: validated.append(a))
+    store = CheckpointStore(spark, "nosuchfs://b/ckpt")
+    with pytest.raises(Exception, match='scheme "nosuchfs"'):
+        validate_resumable(
+            eng, data, parse_contract_yaml(CONTRACT, name="ckpt-test"), store,
+            run_id="r1", partition_col="conv_id", ts_col=None,
+        )
+    assert validated == []
+
 def test_resumable_violations_written_before_checkpoint(spark, data, tmp_path):
     """Crash-safety ordering: violations land (partitioned, idempotent
     overwrite) before the checkpoint flips; resume does not clobber

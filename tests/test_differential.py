@@ -218,3 +218,57 @@ def test_lean_predicates_stringly_numeric_enum(spark):
             if row[f"p_{i}"]:
                 lean[(f, t)] += 1
         assert arr == lean, (v, arr, lean)
+
+
+@pytest.mark.parametrize(
+    "values, expected_summary",
+    [
+        # all 12 `min: 0` rules fail: the cap keeps the first 10
+        ([-1] * 12, {"VALUE_TOO_SMALL": 10}),
+        # 6 `min` failures, then 6 `max` failures of which 4 survive the cap
+        ([-1] * 6 + [101] * 6, {"VALUE_TOO_SMALL": 6, "VALUE_TOO_LARGE": 4}),
+    ],
+)
+def test_reported_counts_equal_written_rows_past_cap(
+    spark, tmp_path, values, expected_summary
+):
+    """A flat (lean-predicate) contract where one record fails more rules
+    than the per-record cap: report() and execute() must count exactly the
+    violation rows execute() writes, as the reference does."""
+    from data_contract_engine_spark import ContractEngine
+
+    names = [f"n{i:02d}" for i in range(12)]
+    contract = contract_from_dict(
+        {
+            "contract_version": "1.0",
+            "schema": {
+                n: {"type": "integer", "required": True, "min": 0, "max": 100}
+                for n in names
+            },
+        },
+        name="capped",
+    )
+    schema = T.StructType([T.StructField(n, T.LongType()) for n in names])
+    record = dict(zip(names, values))
+    df = spark.createDataFrame([tuple(values), tuple([5] * 12)], schema)
+    expected = validate_record(record, contract)
+    oracle_summary = {}
+    for _field, et in expected:
+        oracle_summary[et] = oracle_summary.get(et, 0) + 1
+    assert oracle_summary == expected_summary
+
+    run = ContractEngine(spark).validate(df, contract, key_columns=["n00"])
+    assert run.compiled.predicates is not None
+    rep = run.report()
+    out = str(tmp_path / "viol")
+    exe = run.execute(out)
+    written = spark.read.parquet(out)
+    written_summary = {
+        r["error_type"]: r["count"]
+        for r in written.groupBy("error_type").count().collect()
+    }
+    for got in (rep, exe):
+        assert (got.passed, got.failed) == (1, 1)
+        assert got.errors_summary == expected_summary
+        assert got.total_violation_rows == len(expected) == written.count()
+    assert written_summary == expected_summary

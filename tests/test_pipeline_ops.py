@@ -148,6 +148,20 @@ def test_cosine_topk_multi_pandas_matches_crossjoin(spark):
     with pytest.raises(Exception, match="zero-norm"):
         similarity.cosine_topk_multi_pandas(bad, queries, k=3).collect()
 
+    # a NULL vector, or one wider than the queries, raises too: the wide
+    # vector used to fold only its first 12 elements and score silently
+    for odd_row, msg in (
+        ((503, None), "null embedding vector"),
+        ((503, [0.5] * 13), r"expected vectors of width 12, got widths \[12, 13\]"),
+    ):
+        odd = emb.union(
+            spark.createDataFrame([odd_row], "vec_id long, embedding array<float>")
+        ).coalesce(1)
+        with pytest.raises(Exception, match=msg):
+            similarity.cosine_topk_multi_pandas(odd, queries, k=3).collect()
+        with pytest.raises(Exception, match=msg):
+            similarity.cosine_topk(odd, queries[0][1], k=3).collect()
+
 
 def test_ann_lsh_recovers_exact_neighbor(spark):
     import random
