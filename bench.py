@@ -5,7 +5,7 @@ Prints ONE JSON line:
    "queries": {name: sec, ...}, "sf": ..., "throughput": {...}}
 
 The flagship number is the full contract suite (schema rules + quality
-aggregates + salted uniqueness + broadcast referential + PSI drift) over
+aggregates + uniqueness + literal-set referential + PSI drift) over
 the transcripts table derived from events — the BASELINE.json metric is
 validated turns/sec for exactly that job.
 """

@@ -38,7 +38,6 @@ import time
 from dataclasses import dataclass
 from typing import List, Optional, Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .contracts.model import Contract
@@ -68,15 +67,16 @@ class CheckpointStore:
         self.path = path
 
     def _read(self) -> Optional[DataFrame]:
-        """The checkpoint relation, or None when nothing was written yet.
-        Any other failure (unknown filesystem scheme, no access) raises:
-        an unreadable checkpoint must not read as "nothing done"."""
-        try:
-            return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
-        except AnalysisException as e:
-            if e.getCondition() == "PATH_NOT_FOUND":
-                return None
-            raise
+        """The checkpoint relation, or None when nothing was written yet
+        (asked of the Hadoop FileSystem, so a first run does not make the
+        parquet reader log a missing-path stack trace). Any other failure
+        (unknown filesystem scheme, no access) raises: an unreadable
+        checkpoint must not read as "nothing done"."""
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
+        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        if not fs.exists(path):
+            return None
+        return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
 
     def done_partitions(self, run_id: str, lineage: str) -> List[str]:
         df = self._read()

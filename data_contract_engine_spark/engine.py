@@ -5,8 +5,9 @@ Replaces the reference's HTTP + per-record interpreter lifecycle
 
     contract YAML → dataclass IR → compile to Column expressions →
     one fused select (schema rules) →
-    one global agg (freshness/completeness/statistics) +
-    uniqueness agg + broadcast referential anti-join + drift →
+    one global agg (freshness/completeness/statistics/referential, every
+    vocabulary inlined as a literal set) +
+    uniqueness agg + drift →
     verdict/violation/report artifacts.
 
 Everything distributed stays a DataFrame (violations, per-record results,
@@ -221,7 +222,8 @@ class ValidationRun:
     def _agg_exprs(self, drift_exprs, drift_edges, drift_cats) -> List:
         """All fused-pass aggregate expressions: verdict counters +
         error-type counts (finite taxonomy — the batch error summary needs
-        no second scan) + quality aggs + drift current-histograms."""
+        no second scan) + quality aggs + referential misses (vocabularies
+        resolved to literal sets) + drift current-histograms."""
         rules = self.contract.quality
         ec = self.compiled.options.errors_column
         agg_exprs = [
@@ -235,6 +237,12 @@ class ValidationRun:
         else:
             agg_exprs += _array_error_counts(ec)
         quality_exprs = build_quality_agg_exprs(self.df, rules)
+        if rules.referential:
+            # resolves every vocabulary first: a bad referential rule
+            # raises here, before any fact-table job or write
+            quality_exprs += ref_op.fused_vocab_miss_agg(
+                self.df, rules.referential, self.engine.vocab_tables
+            )
         if drift_edges:
             quality_exprs += drift_op.multi_histogram_exprs(
                 drift_edges, drift_exprs
@@ -247,11 +255,12 @@ class ValidationRun:
 
     def report(self, sample_errors: int = 50) -> BatchReport:
         """One fused agg pass computes schema counters + error-type counts
-        + freshness + completeness + statistics + literal-vocab referential
-        + drift current-histograms; only uniqueness (its own shuffle),
-        table-backed referential (broadcast anti-join) and the gated sample
-        job add scans. See :meth:`execute` for the zero-extra-scan variant
-        that also writes the violations artifact."""
+        + freshness + completeness + statistics + referential (every
+        vocabulary as a literal set; a vocabulary table costs one small
+        read of that table, never of the fact table) + drift
+        current-histograms; only uniqueness (its own shuffle) and the gated
+        sample job add scans. See :meth:`execute` for the zero-extra-scan
+        variant that also writes the violations artifact."""
         if self._report is not None:
             return self._report
         t0 = time.time()
@@ -273,8 +282,10 @@ class ValidationRun:
         """ONE-action execution for the 100 TB shape: the violations
         artifact is written while the SAME scan's aggregates are collected
         via ``DataFrame.observe`` — no separate aggregate pass over the
-        input. Remaining extra jobs: uniqueness (needs its own shuffle) and
-        drift scoring (tiny histogram relation)."""
+        input, and referential rules included. Remaining extra jobs:
+        vocabulary-table reads (before the write; they read only the vocab
+        tables), uniqueness (needs its own shuffle) and drift scoring (tiny
+        histogram relation)."""
         from pyspark.sql import Observation
 
         t0 = time.time()
@@ -349,7 +360,6 @@ class ValidationRun:
         if rules.any() and passed > 0:
             qerrors = decode_quality_row(agg_row, rules, now_epoch=self._now())
             qerrors += self._uniqueness_errors()
-            qerrors += self._referential_table_errors()
             qerrors += self._drift_errors_fused(
                 agg_row, drift_edges, drift_cats, base_bins
             )
@@ -429,11 +439,7 @@ class ValidationRun:
                 self.df, key, self.contract.name
             ).select(
                 "contract_id", "rule", "field",
-                F.concat_ws(
-                    "|",
-                    *[F.col(c).cast("string")
-                      for c in uniq_op._key_cols(key)],
-                ).alias("key"),
+                uniq_op._key_string(key).alias("key"),
                 "dup_count",
             )
             for key in rules.uniqueness.get("fields", [])
@@ -441,51 +447,6 @@ class ValidationRun:
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f)
-        return out
-
-    def _referential_table_errors(self) -> List[QualityError]:
-        """Table-backed vocabularies only (literal-value vocabs fuse into
-        the main agg pass): ONE job for all k vocab columns — the fact
-        table is chained through k broadcast LEFT joins (each marking
-        membership via the surviving vocab-key column) and a single
-        fused aggregate counts misses + collects ≤5 examples per column.
-        One scan of the fact table, zero fact shuffles (all joins
-        broadcast; the agg is a 1-row global aggregate), one collect —
-        regardless of how many vocab tables the contract declares
-        (pinned by tests/test_quality.py::
-        test_referential_table_vocabs_single_job)."""
-        rules = self.contract.quality
-        if not rules.referential:
-            return []
-        vocabs: Dict[str, tuple] = {}
-        for column, spec in rules.referential.items():
-            if "values" in spec:
-                continue  # handled in the fused agg
-            vocab = self.engine.vocab_tables.get(spec["table"])
-            if vocab is None:
-                # an unresolvable table raises Spark's error naming it: a
-                # misconfigured rule is never skipped silently
-                vocab = self.engine.spark.table(spec["table"])
-            vocabs[column] = (vocab, spec.get("column"))
-        if not vocabs:
-            return []
-        row = ref_op.fused_vocab_miss_agg(self.df, vocabs).collect()[0]
-        out: List[QualityError] = []
-        for column in vocabs:
-            n = row[f"__refn__{column}"] or 0
-            if n:
-                out.append(
-                    QualityError(
-                        rule_type="REFERENTIAL",
-                        message=(
-                            f"Field '{column}' has {n} values outside "
-                            f"the reference vocabulary: "
-                            f"{', '.join(row[f'__refex__{column}'] or [])}"
-                        ),
-                        severity=SEVERITY_ERROR,
-                        details={"field": column, "invalid_count": n},
-                    )
-                )
         return out
 
     def _drift_errors_fused(

@@ -1,10 +1,14 @@
-"""Referential-integrity checks as broadcast anti-joins.
+"""Referential-integrity checks.
 
 Generalizes the reference's enum-membership check
 (`app/core/schema_validator.py:146-155`, SURVEY.md §2.4 J2) to
-vocabularies too large to inline as literals: role/tool vocabularies,
-dimension-table keys. The vocabulary side is always broadcast — it is the
-small dimension — so the fact table never shuffles.
+vocabularies kept in a table: role/tool vocabularies, dimension-table keys.
+
+The report-level check (:func:`fused_vocab_miss_agg`) resolves every
+vocabulary, literal or table, to a literal set probed inside the engine's
+fused aggregate (``OptimizeIn`` hashes a set of more than 10 values into
+an ``InSet``): the fact table is scanned once and never joined. Row-level
+violations are broadcast anti-joins, so the fact table never shuffles.
 
 NULL values are treated as "no reference to check" (the reference only
 runs enum checks on present values); nullability is the completeness /
@@ -13,9 +17,15 @@ required-field rule's job.
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
+from typing import Any, Dict, Iterable, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from ..contracts.model import ContractError
+
+# Largest vocabulary table inlined as a literal set; building the Column
+# took ~0.03 s of driver time at 10 values, ~1.7 s at 1,000 (4-core host).
+MAX_VOCAB_VALUES = 1000
 
 
 def vocab_df(spark: SparkSession, values: Iterable, column: str) -> DataFrame:
@@ -44,48 +54,55 @@ def invalid_references(
 
 def fused_vocab_miss_agg(
     df: DataFrame,
-    vocabs: "dict[str, tuple[DataFrame, Optional[str]]]",
+    referential: Dict[str, Dict[str, Any]],
+    vocab_tables: Dict[str, DataFrame],
     n_examples: int = 5,
-) -> DataFrame:
-    """ONE-row aggregate covering EVERY table-backed vocab column in a
-    single query: the fact table chains through one broadcast LEFT join
-    per column (marking membership via the surviving key column), then a
-    single global aggregate counts misses and collects ≤``n_examples``
-    sorted example values per column.
-
-    ``vocabs``: {fact_column: (vocab_df, vocab_column_or_None)}.
-    Output columns: ``__refn__{col}`` (miss count, long) and
-    ``__refex__{col}`` (array<string> examples).
-
-    Plan shape: one scan of the fact table, zero fact shuffles (all
-    joins broadcast, the aggregate is global with map-side partial
-    combine), one job regardless of k — the round-2 verdict fix for the
-    one-collect-per-column anti-join loop.
-    """
-    joined = df
-    for column, (vocab, vocab_col) in vocabs.items():
-        vc = vocab_col or column
-        marker = f"__refvocab__{column}"
-        joined = joined.join(
-            F.broadcast(vocab.select(F.col(vc).alias(marker)).distinct()),
-            on=F.col(column) == F.col(marker),
-            how="left",
-        )
-    aggs = []
-    for column in vocabs:
-        bad = F.col(column).isNotNull() & F.col(
-            f"__refvocab__{column}"
-        ).isNull()
-        aggs.append(F.sum(bad.cast("long")).alias(f"__refn__{column}"))
-        aggs.append(
-            F.slice(
-                F.sort_array(
-                    F.collect_set(F.when(bad, F.col(column).cast("string")))
-                ),
-                1, n_examples,
-            ).alias(f"__refex__{column}")
-        )
-    return joined.agg(*aggs)
+) -> List[Column]:
+    """Aggregate expressions for the engine's fused pass over ``df``, per
+    referential column: ``__refbad__{col}`` (miss count) and
+    ``__refex__{col}`` (≤ ``n_examples`` sorted misses), decoded by
+    ``quality.aggregates.decode_quality_row``. A ``table:`` vocabulary
+    comes from ``vocab_tables``, else the Spark catalog, and is read once:
+    at most MAX_VOCAB_VALUES + 1 non-null values of its key column. Raises
+    before any fact-table job on a column missing from ``df``, a table
+    over the bound, or a table that resolves nowhere."""
+    missing = [c for c in referential if c not in df.columns]
+    if missing:
+        raise ContractError(f"referential columns {missing} not in the input")
+    exprs: List[Column] = []
+    for column, spec in referential.items():
+        if "values" in spec:
+            values = spec["values"]
+        else:
+            table, vc = spec["table"], spec["column"]
+            vocab = vocab_tables.get(table)
+            if vocab is None:  # raises Spark's error naming the table
+                vocab = df.sparkSession.table(table)
+            # sort + limit plans as a top-k: ONE job, every partition in
+            # parallel keeps ≤ MAX_VOCAB_VALUES + 1 values (a plain limit
+            # runs 2+ jobs, a coalesce(1) reads serially)
+            rows = (
+                vocab.select(vc).where(F.col(vc).isNotNull())
+                .orderBy(vc).limit(MAX_VOCAB_VALUES + 1).collect()
+            )
+            if len(rows) > MAX_VOCAB_VALUES:
+                raise ContractError(
+                    f"referential vocabulary table '{table}' column '{vc}' "
+                    f"has more than MAX_VOCAB_VALUES={MAX_VOCAB_VALUES} "
+                    f"values"
+                )
+            values = [r[0] for r in rows]
+        # NULL leaves the set: `x IN (..., NULL)` is NULL for a miss; an
+        # empty set makes every non-null value a miss
+        values = [v for v in values if v is not None]
+        bad = F.col(column).isNotNull() & ~F.col(column).isin(*values)
+        misses = F.collect_set(F.when(bad, F.col(column).cast("string")))
+        exprs += [
+            F.sum(bad.cast("long")).alias(f"__refbad__{column}"),
+            F.slice(F.sort_array(misses), 1, n_examples)
+            .alias(f"__refex__{column}"),
+        ]
+    return exprs
 
 
 def referential_violations(

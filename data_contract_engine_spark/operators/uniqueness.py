@@ -3,7 +3,8 @@
 Reference semantics (`app/core/quality_validator.py:157-182`): for each
 configured field, count value occurrences; any value occurring more than
 once is a violation, reported as ONE QualityError per field listing up to
-five duplicate values as ``'<val>' (<n>x)``. Nulls participate as values.
+five duplicate values as ``'<val>' (<n>x)``. Nulls participate as values
+and render as ``None`` (``'None|3' (2x)`` for a composite key).
 
 Scale design (north rule: uniqueness over (conv_id, turn_idx) at 10^12
 rows with hot conversations): one ``groupBy(key).count()``. Spark's hash
@@ -35,6 +36,15 @@ def _key_cols(key: KeySpec) -> List[str]:
     return [key] if isinstance(key, str) else list(key)
 
 
+def _key_string(key: KeySpec):
+    """A key as reported: components joined by ``|``, a NULL component
+    rendered ``None`` as the reference's ``f"'{val}'"`` formats it."""
+    return F.concat_ws("|", *[
+        F.coalesce(F.col(c).cast("string"), F.lit("None"))
+        for c in _key_cols(key)
+    ])
+
+
 def duplicate_counts(df: DataFrame, key: KeySpec) -> DataFrame:
     """DataFrame of (key columns..., dup_count) for keys with count > 1."""
     cols = _key_cols(key)
@@ -45,7 +55,6 @@ def duplicate_counts(df: DataFrame, key: KeySpec) -> DataFrame:
 def duplicate_report(df: DataFrame, key: KeySpec, top_n: int = 5):
     """(n_duplicate_keys, [formatted top-N strings]) for the QualityError
     message — parity with `quality_validator.py:169-172`."""
-    cols = _key_cols(key)
     dups = duplicate_counts(df, key)
     agg = dups.agg(
         F.count(F.lit(1)).alias("n"),
@@ -54,7 +63,7 @@ def duplicate_report(df: DataFrame, key: KeySpec, top_n: int = 5):
                 F.collect_list(
                     F.struct(
                         (-F.col("dup_count")).alias("neg"),
-                        F.concat_ws("|", *[F.col(c).cast("string") for c in cols]).alias("k"),
+                        _key_string(key).alias("k"),
                         F.col("dup_count").alias("c"),
                     )
                 )
@@ -133,7 +142,7 @@ def multi_duplicate_reports(
     gs, gids, key_lists = multi_duplicate_counts(df, keys)
     key_str = None
     for gid, cols in zip(gids, key_lists):
-        s = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
+        s = _key_string(cols)
         key_str = (
             F.when(F.col("__gid") == gid, s)
             if key_str is None

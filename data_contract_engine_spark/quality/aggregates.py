@@ -9,8 +9,10 @@ which loops over records in Python. Here:
     1-row reduce;
   * uniqueness (A4) is a two-stage salted hash-aggregate (its own module,
     :mod:`data_contract_engine_spark.operators.uniqueness`);
-  * referential integrity (J2) is a broadcast anti-join
-    (:mod:`data_contract_engine_spark.operators.referential`);
+  * referential integrity (J2) rides the same fused aggregate: every
+    vocabulary, literal or table-backed, resolves to a literal set
+    (:func:`data_contract_engine_spark.operators.referential.
+    fused_vocab_miss_agg`) and is decoded here;
   * drift (A16) joins approx_percentile histograms and scores KL/PSI in a
     pandas UDF (:mod:`data_contract_engine_spark.operators.drift`).
 
@@ -192,28 +194,6 @@ def build_quality_agg_exprs(
                     )
                     exprs.append(agg.alias(f"__pctl__{c}__{_pctl_tag(p)}"))
 
-    # referential with literal vocab fuses into the same pass: invalid
-    # count + top-5 sorted examples per column (table-backed vocabularies
-    # go through the broadcast anti-join path in the engine instead).
-    if rules.referential:
-        for c, spec in rules.referential.items():
-            if "values" not in spec or c not in schema_by_name:
-                continue
-            invalid = F.col(c).isNotNull() & ~F.col(c).isin(*spec["values"])
-            exprs.append(
-                F.sum(invalid.cast("long")).alias(f"__refbad__{c}")
-            )
-            exprs.append(
-                F.slice(
-                    F.sort_array(
-                        F.collect_set(
-                            F.when(invalid, F.col(c).cast("string"))
-                        )
-                    ),
-                    1,
-                    5,
-                ).alias(f"__refex__{c}")
-            )
     return exprs
 
 
@@ -224,7 +204,8 @@ def decode_quality_row(
 ) -> List[QualityError]:
     """Turn the collected 1-row aggregate into reference-parity
     QualityError objects (same rule order: freshness → completeness →
-    [uniqueness/referential/drift handled elsewhere] → statistics)."""
+    [uniqueness/drift handled elsewhere] → referential, in declaration
+    order → statistics)."""
     errors: List[QualityError] = []
     n = row["__row_count"]
 

@@ -1,7 +1,8 @@
 """Scaling-efficiency evidence: the SAME production job
-(``ValidationRun.execute``: violations write + fused aggregates, plus the
-uniqueness / referential / drift jobs) at three local parallelism levels
-N, 2N, 4N over the same input, where 4N is the host's core count
+(``ValidationRun.execute``: violations write + fused aggregates, with
+referential rules inside them, plus the uniqueness / drift jobs) at
+three local parallelism levels N, 2N, 4N over the same input, where 4N
+is the host's core count
 (the CPUs this process may run on, as `nproc` reports; a 4-core host runs
 local[1], local[2], local[4]).
 
@@ -11,8 +12,8 @@ levels (BASELINE.md):
 
 Usage: python scripts/bench_scaling.py [n_convs]
   env DCE_SCALE_DATA=<parquet dir> reuses generated input.
-Writes the scaling section of BENCH.md and merges its result (with the
-host's core count) into BENCH_SCALING.json.
+Writes the scaling section of BENCH.md and its result (with the host's
+core count) to BENCH_SCALING.json, replacing the file whole.
 """
 
 from __future__ import annotations
@@ -153,7 +154,7 @@ uniqueness/referential/drift aggregates the reference runs separately or
 not at all).
 """
     # regenerate only the scaling section; keep every manually-maintained
-    # section below the marker (asymptote table, headline bench, skew)
+    # section below the marker (headline bench, skew)
     bench_path = os.path.join(REPO, "BENCH.md")
     manual = ""
     try:
@@ -167,16 +168,9 @@ not at all).
         f.write(md + "\n" + MANUAL_MARK + manual)
     print(md)
     # single source of truth for measured evidence: bench.py embeds this
-    # artifact instead of hardcoding numbers that would go stale. Merge
-    # into the existing file: keys owned by other scripts (e.g. the
-    # ``asymptote`` entry from bench_throughput.py) must survive a rerun.
+    # artifact instead of hardcoding numbers that would go stale
     art_path = os.path.join(REPO, "BENCH_SCALING.json")
-    try:
-        with open(art_path) as f:
-            artifact = json.load(f)
-    except (OSError, ValueError):
-        artifact = {}
-    artifact.update({
+    artifact = {
         "pair": f"local[{n}] -> local[{n4}]",
         "efficiency_n_to_4n": round(eff, 3),
         "turns_per_sec": {f"local{c}": results[c]["turns_per_sec"] for c in levels},
@@ -184,7 +178,7 @@ not at all).
         "host_cores": cores,
         "timed": "ValidationRun.execute, min of 3 runs per level",
         "source": "scripts/bench_scaling.py",
-    })
+    }
     with open(art_path, "w") as f:
         json.dump(artifact, f, indent=1)
     print(json.dumps({k: artifact[k] for k in ("pair", "efficiency_n_to_4n", "host_cores")}))

@@ -127,19 +127,27 @@ def main():
         + "```\n"
     )
 
-    roles = ref_op.vocab_df(
-        spark, ["system", "user", "assistant", "tool"], "role")
+    # a tool vocabulary TABLE of 12 values (above Spark's 10-value InSet
+    # threshold) beside the literal role vocabulary
+    tools = ref_op.vocab_df(spark, [
+        "search", "browser", "python", "sql", "calculator", "shell",
+        "editor", "fetch", "maps", "calendar", "email", "translate",
+    ], "tool")
     out.append(
-        "## 4b. Fused multi-vocab referential — one job for k columns\n\n"
-        "The fact table chains through one `BroadcastHashJoin` per vocab "
-        "column (build side = the tiny vocab key set) into a single "
-        "global `HashAggregate` counting misses + collecting examples "
-        "for every column — one fact scan, zero fact shuffles, one "
-        "collect regardless of k (round-2 verdict: was one job per "
-        "column).\n\n"
+        "## 4b. Referential rules inside the fused aggregate — no join\n\n"
+        "Every vocabulary, literal (`role`) or table-backed (`tool`, read "
+        "once on the driver: ≤ `MAX_VOCAB_VALUES` + 1 rows of its key "
+        "column), becomes a literal set in the same global "
+        "`ObjectHashAggregate` that counts misses + collects ≤5 examples "
+        "per column: one fact scan, no join, no fact shuffle. Above 10 "
+        "values `OptimizeIn` turns the set into a hashed `InSet`; the "
+        "4-value role set stays a plain `IN`.\n\n"
         "```\n"
-        + trim(plan_of(ref_op.fused_vocab_miss_agg(
-            tr, {"tool": (vocab, None), "role": (roles, None)})))
+        + trim(plan_of(tr.agg(*ref_op.fused_vocab_miss_agg(
+            tr,
+            {"tool": {"table": "tools", "column": "tool"},
+             "role": {"values": ["system", "user", "assistant", "tool"]}},
+            {"tools": tools}))))
         + "```\n"
     )
 

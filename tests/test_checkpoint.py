@@ -98,6 +98,18 @@ def test_unreadable_checkpoint_raises_before_validating(spark, data, monkeypatch
         )
     assert validated == []
 
+def test_missing_checkpoint_reads_as_nothing_done(spark, tmp_path, monkeypatch):
+    """A checkpoint path that does not exist yet (every first run) means
+    "nothing done", found through the filesystem without a parquet read
+    (which would log a missing-path stack trace)."""
+    def no_read(self):
+        raise AssertionError("spark.read called for a missing checkpoint")
+
+    store = CheckpointStore(spark, str(tmp_path / "never_written"))
+    monkeypatch.setattr(type(spark), "read", property(no_read))
+    assert store.done_partitions("r1", "lineage") == []
+
+
 def test_resumable_violations_written_before_checkpoint(spark, data, tmp_path):
     """Crash-safety ordering: violations land (partitioned, idempotent
     overwrite) before the checkpoint flips; resume does not clobber

@@ -38,6 +38,38 @@ def test_duplicate_report_ordering(spark):
     assert top == ["'b' (5x)", "'c' (3x)"]  # count desc, deterministic
 
 
+def test_uniqueness_null_keys_render_as_none(spark):
+    """A NULL key component is reported as `None`, as the reference's
+    Python formatting does (`'None' (3x)`); composite keys as `None|3`.
+    The fused multi-key report, the per-key report and the violation rows
+    agree."""
+    from data_contract_engine_spark import ContractEngine, contract_from_dict
+
+    df = spark.createDataFrame(
+        [(None, 3)] * 3 + [("a", 1), ("a", 1), ("b", None), ("b", None)],
+        "k string, n int",
+    )
+    single = uniq_op.duplicate_report(df, "k")
+    composite = uniq_op.duplicate_report(df, ["k", "n"])
+    assert single == (3, ["'None' (3x)", "'a' (2x)", "'b' (2x)"])
+    assert composite == (3, ["'None|3' (3x)", "'a|1' (2x)", "'b|None' (2x)"])
+    fused = uniq_op.multi_duplicate_reports(df, ["k", ["k", "n"]])
+    assert fused == {"k": single, "k,n": composite}
+
+    contract = contract_from_dict({
+        "contract_version": "1.0",
+        "schema": {"k": {"type": "string", "required": False}},
+        "quality_rules": {"uniqueness": {"fields": ["k", ["k", "n"]]}},
+    })
+    run = ContractEngine(spark).validate(df, contract, key_columns=["k"])
+    keys = {(r["field"], r["key"], r["dup_count"])
+            for r in run.uniqueness_violations().collect()}
+    assert keys == {
+        ("k", "None", 3), ("k", "a", 2), ("k", "b", 2),
+        ("k,n", "None|3", 3), ("k,n", "a|1", 2), ("k,n", "b|None", 2),
+    }
+
+
 def test_referential_anti_join_broadcast(spark):
     df = spark.createDataFrame(
         [("r1", "search"), ("r2", "fax"), ("r3", None), ("r4", "sql")],

@@ -118,8 +118,16 @@ records = st.lists(
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@given(schema=contracts, recs=records)
-def test_engine_equals_oracle_on_random_contracts(spark, schema, recs):
+@given(schema=contracts, recs=records,
+       max_errors=st.sampled_from([1, 2, 3, 10]))
+def test_engine_equals_oracle_on_random_contracts(spark, schema, recs,
+                                                  max_errors):
+    """Per record the capped error array equals the oracle's first
+    ``max_errors`` errors; report()'s counts, execute()'s counts and its
+    written rows all equal the oracle's capped total."""
+    import tempfile
+
+    from data_contract_engine_spark import ContractEngine
     # hypothesis may generate min>max etc. — the parser rejects those;
     # skip structurally invalid draws (parser behavior tested elsewhere)
     from data_contract_engine_spark.contracts.model import ContractError
@@ -137,19 +145,32 @@ def test_engine_equals_oracle_on_random_contracts(spark, schema, recs):
     df = spark.createDataFrame(
         [tuple(r[n] for n in _field_names) for r in recs], spark_schema
     ).withColumn("__row", F.monotonically_increasing_id())
-    compiled = compile_contract(contract, spark_schema, CompileOptions())
+    options = CompileOptions(max_errors=max_errors)
+    compiled = compile_contract(contract, spark_schema, options)
 
     select_cols = ["__row", compiled.errors_col.alias("errors")]
     if compiled.predicates is not None:
         select_cols.append(compiled.passed_col.alias("lean_passed"))
     rows = df.select(*select_cols).orderBy("__row").collect()
 
+    capped_total = 0
     for rec, row in zip(recs, rows):
         expect = validate_record(rec, contract)
+        capped_total += min(len(expect), max_errors)
         got = [(e["field"], e["error_type"]) for e in row["errors"]]
-        assert got == expect, (schema, rec, expect, got)
+        assert got == expect[:max_errors], (schema, rec, expect, got)
         if compiled.predicates is not None:
             assert row["lean_passed"] == (len(expect) == 0), (schema, rec)
+
+    eng = ContractEngine(spark, compile_options=options)
+    rep = eng.validate(df, contract, ["__row"]).report(sample_errors=0)
+    with tempfile.TemporaryDirectory() as out:
+        rep_x = eng.validate(df, contract, ["__row"]).execute(out + "/v")
+        written = spark.read.parquet(out + "/v").count()
+    assert rep.errors_summary == rep_x.errors_summary
+    assert (rep.total_violation_rows == sum(rep.errors_summary.values())
+            == rep_x.total_violation_rows == written == capped_total), (
+        schema, recs, max_errors, rep.errors_summary, written)
 
 
 # ---------------------------------------------------------------------------

@@ -324,29 +324,27 @@ def test_categorical_drift_rule_in_contract(spark):
     assert "PSI" in drift_errs[0].message
 
 
-def test_referential_table_vocabs_single_job(spark, monkeypatch):
-    """k table-backed vocab columns → ONE collected query (round-2
-    verdict item #6: the old path issued one collect-job per column).
-    The fact table is chained through k broadcast LEFT joins and a single
-    fused aggregate; the pin below counts DataFrame.collect round trips
-    and checks the one executed plan carries BOTH broadcast joins (the
-    vocab-side `.distinct()` / broadcast-materialization stages remain
-    separate tiny jobs by Spark's execution model — they scan only the
-    vocab tables, never the fact)."""
-    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
-
-    contract = contract_from_dict(
+def _ref_contract(referential):
+    return contract_from_dict(
         {
             "contract_version": "1.0",
             "schema": {"id": {"type": "string"}},
-            "quality_rules": {
-                "referential": {
-                    "role": {"table": "roles", "column": "role"},
-                    "tool": {"table": "tools", "column": "tool"},
-                }
-            },
+            "quality_rules": {"referential": referential},
         }
     )
+
+
+def test_referential_table_vocabs_single_job(spark, monkeypatch):
+    """k table-backed vocab columns resolve to literal sets inside the
+    fused aggregate: during report() exactly one collected plan reads the
+    fact relation, and it contains no join. The other collects read only
+    the vocab tables."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+
+    contract = _ref_contract({
+        "role": {"table": "roles", "column": "role"},
+        "tool": {"table": "tools", "column": "tool"},
+    })
     df = spark.createDataFrame(
         [("a", "user", "search"), ("b", "ghost", "search"),
          ("c", "user", "hammer"), ("d", None, None)],
@@ -367,14 +365,16 @@ def test_referential_table_vocabs_single_job(spark, monkeypatch):
         return real_collect(frame)
 
     monkeypatch.setattr(ClassicDF, "collect", spy)
-    errors = run._referential_table_errors()
+    errors = run.report().quality.errors
     monkeypatch.undo()
 
-    assert len(collected) == 1, "expected ONE fused collect for k vocabs"
-    plan = collected[0]._jdf.queryExecution().executedPlan().toString()
-    # AQE prints the plan twice (Final + Initial) — check the final one
-    final_plan = plan.split("== Initial Plan ==")[0]
-    assert final_plan.count("BroadcastHashJoin") == 2
+    plans = [
+        f._jdf.queryExecution().executedPlan().toString() for f in collected
+    ]
+    # the fact relation is the only scan carrying the `id` column
+    fact_plans = [p for p in plans if "ExistingRDD[id#" in p]
+    assert len(fact_plans) == 1, plans
+    assert "Join" not in fact_plans[0]
 
     by_field = {e.details["field"]: e for e in errors}
     assert by_field["role"].details["invalid_count"] == 1
@@ -384,6 +384,133 @@ def test_referential_table_vocabs_single_job(spark, monkeypatch):
     assert by_field["role"].message.startswith(
         "Field 'role' has 1 values outside the reference vocabulary:"
     )
+
+
+def test_referential_literal_and_table_vocab_parity(spark, tmp_path):
+    """The same vocabulary declared as `values:` and as a table yields an
+    identical QualityResult from report() and from execute(); errors come
+    out in contract declaration order for both sources."""
+    df = spark.createDataFrame(
+        [("a", "user", "search"), ("b", "ghost", "drill"),
+         ("c", "bot", "hammer"), ("d", None, "search")],
+        "id string, role string, tool string",
+    )
+    tables = {
+        "roles": spark.createDataFrame([("user",), ("assistant",)], ["role"]),
+        "tools": spark.createDataFrame([("search",), ("calc",)], ["tool"]),
+    }
+    literal = _ref_contract({
+        "tool": {"values": ["search", "calc"]},
+        "role": {"values": ["user", "assistant"]},
+    })
+    # mixed: a table vocab declared before a literal one
+    table = _ref_contract({
+        "tool": {"table": "tools", "column": "tool"},
+        "role": {"values": ["user", "assistant"]},
+    })
+    eng = ContractEngine(spark, vocab_tables=tables, now_epoch=NOW)
+    results = []
+    for i, contract in enumerate((literal, table)):
+        results.append(eng.validate(df, contract, key_columns=["id"])
+                       .report().quality)
+        results.append(eng.validate(df, contract, key_columns=["id"])
+                       .execute(str(tmp_path / f"v{i}")).quality)
+    assert all(r == results[0] for r in results[1:]), results
+    assert [e.details["field"] for e in results[0].errors] == ["tool", "role"]
+    assert results[0].errors[0].message == (
+        "Field 'tool' has 2 values outside the reference vocabulary: "
+        "drill, hammer"
+    )
+
+
+def test_referential_vocab_table_with_null(spark):
+    """A NULL in the vocabulary table is dropped from the literal set
+    (`x IN (.., NULL)` is NULL and would hide every miss); a NULL fact
+    value is never a miss."""
+    df = spark.createDataFrame(
+        [("a", "search"), ("b", "hammer"), ("c", None), ("d", "drill")],
+        "id string, tool string",
+    )
+    tools = spark.createDataFrame([("search",), (None,)], "tool string")
+    q = (
+        ContractEngine(spark, vocab_tables={"tools": tools})
+        .validate(df, _ref_contract(
+            {"tool": {"table": "tools", "column": "tool"}}), ["id"])
+        .report().quality
+    )
+    assert [e.details for e in q.errors] == [
+        {"field": "tool", "invalid_count": 2}
+    ]
+    assert q.errors[0].message.endswith(": drill, hammer")
+
+
+def test_referential_empty_vocab_table(spark):
+    """An empty vocabulary table makes every non-null value a miss; the
+    message lists the 5 smallest distinct misses."""
+    df = spark.createDataFrame(
+        [(str(i), t) for i, t in enumerate("gfedcbaa")] + [("z", None)],
+        "id string, tool string",
+    )
+    tools = spark.createDataFrame([], "tool string")
+    q = (
+        ContractEngine(spark, vocab_tables={"tools": tools})
+        .validate(df, _ref_contract(
+            {"tool": {"table": "tools", "column": "tool"}}), ["id"])
+        .report().quality
+    )
+    assert [e.details for e in q.errors] == [
+        {"field": "tool", "invalid_count": 8}
+    ]
+    assert q.errors[0].message.endswith(": a, b, c, d, e")
+
+
+def test_referential_vocab_over_bound_raises_before_write(spark, tmp_path):
+    """A vocabulary table over MAX_VOCAB_VALUES raises ContractError naming
+    the table, the column and the bound from execute(), before the
+    violations path is written; so does a table that resolves nowhere."""
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    from data_contract_engine_spark.contracts.model import ContractError
+    from data_contract_engine_spark.operators.referential import (
+        MAX_VOCAB_VALUES,
+    )
+
+    df = spark.createDataFrame([("a", "t0"), ("b", "zz")], "id string, tool string")
+    tools = spark.createDataFrame(
+        [(f"t{i}",) for i in range(MAX_VOCAB_VALUES + 1)], ["tool"]
+    )
+    run = ContractEngine(spark, vocab_tables={"big": tools}).validate(
+        df, _ref_contract({"tool": {"table": "big", "column": "tool"}}),
+        ["id"],
+    )
+    out = str(tmp_path / "viol")
+    with pytest.raises(ContractError, match=rf"'big'.*'tool'.*{MAX_VOCAB_VALUES}"):
+        run.execute(out)
+    assert not os.path.exists(out)
+
+    run = ContractEngine(spark).validate(
+        df, _ref_contract({"tool": {"table": "no_such_vocab", "column": "tool"}}),
+        ["id"],
+    )
+    with pytest.raises(AnalysisException, match="no_such_vocab"):
+        run.execute(out)
+    assert not os.path.exists(out)
+
+
+def test_referential_missing_column_raises(spark):
+    """A referential rule over a column the input lacks raises instead of
+    being skipped, for a literal and for a table vocabulary."""
+    from data_contract_engine_spark.contracts.model import ContractError
+
+    df = spark.createDataFrame([("a",)], "id string")
+    tools = spark.createDataFrame([("search",)], ["tool"])
+    eng = ContractEngine(spark, vocab_tables={"tools": tools})
+    for spec in ({"values": ["search"]}, {"table": "tools", "column": "tool"}):
+        run = eng.validate(df, _ref_contract({"tool": spec}), ["id"])
+        with pytest.raises(ContractError, match="tool"):
+            run.report()
 
 
 def test_unresolvable_vocab_table_fails_loudly(spark):
