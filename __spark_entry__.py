@@ -1038,10 +1038,16 @@ def q_stream_drift_monitor(spark, sf_dir):
         .distinct()
         .collect()
     )
-    agg_exprs = drift_op.multi_histogram_exprs(
+    num_cols, num_aggs = drift_op.multi_histogram_exprs(
         {"textlen": TEXTLEN_EDGES}, exprs
-    ) + drift_op.categorical_histogram_exprs({"role": cats}, exprs)
-    row = a.agg(*agg_exprs).collect()[0].asDict()
+    )
+    cat_cols, cat_aggs = drift_op.categorical_histogram_exprs(
+        {"role": cats}, exprs
+    )
+    row = (
+        a.select(*num_cols, *cat_cols).agg(*num_aggs, *cat_aggs)
+        .collect()[0].asDict()
+    )
     snapshot = {
         "textlen": {
             "edges": list(TEXTLEN_EDGES),

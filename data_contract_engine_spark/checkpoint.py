@@ -153,8 +153,13 @@ def validate_resumable(
     if not pending:
         return ResumableResult(run_id, 0, 0, len(done), None)
 
-    # predicate on the partition column → partition pruning at the scan
-    sub = df.filter(F.col(partition_col).cast("string").isin(pending))
+    # predicate on the partition column → partition pruning at the scan;
+    # a pending NULL partition needs its own test (`x IN (NULL)` is NULL)
+    part = F.col(partition_col)
+    cond = part.cast("string").isin([p for p in pending if p is not None])
+    if None in pending:
+        cond = cond | part.isNull()
+    sub = df.filter(cond)
     run = engine.validate(sub, contract, key_columns=key_columns)
 
     if violations_out:

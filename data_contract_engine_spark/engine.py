@@ -31,7 +31,7 @@ from __future__ import annotations
 import time
 import uuid
 from dataclasses import dataclass, replace
-from typing import Any, Dict, List, Optional, Sequence, Union
+from typing import Any, Dict, List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -67,26 +67,38 @@ class BatchReport:
     total_violation_rows: int = 0
 
 
-def _lean_error_counts(predicates, max_errors: int) -> List:
-    """Per-error-type sums of the lean predicates, plus ``__over_cap``: the
-    number of records failing more than ``max_errors`` rules. The error
-    array keeps only a record's first ``max_errors`` errors, so the sums
-    equal the written violation rows exactly when ``__over_cap`` is 0;
-    otherwise the report recounts from the array (``_finish_report``).
-    Counting the cut in rule order here instead needs a running sum per
-    rule (measured on a 4-core host): shared running sums ran out of heap
-    at 36 rules, and unshared ones grow the expression quadratically (~6x
-    the planning time at 36 rules; past Spark's 64 KB generated-method
-    limit at 120 rules)."""
-    sums: Dict[str, Any] = {}
-    total = F.lit(0)
-    for _f, et, cond in predicates:
-        hit = F.when(cond, F.lit(1)).otherwise(F.lit(0))
-        sums[et] = sums[et] + hit if et in sums else hit
-        total = total + hit
-    return [F.sum(s).alias(f"__errtype__{et}") for et, s in sums.items()] + [
-        F.sum(F.when(total > max_errors, 1).otherwise(0)).alias("__over_cap")
+def _lean_error_counts(predicates, max_errors: int) -> Tuple[List, List]:
+    """``(row_cols, aggs)`` for the lean error counts. ``row_cols`` holds
+    one int flag per predicate (``coalesce(cond, false)``), projected
+    under the aggregate, so each rule condition runs once per row in the
+    codegen'd projection (where it shares its evaluation with ``passed``)
+    and the aggregate only adds narrow columns: a ``sum`` of the flags per
+    error type, and ``__over_cap``, the records whose flags sum past
+    ``max_errors``.
+
+    The error array keeps only a record's first ``max_errors`` errors, so
+    the sums equal the written violation rows exactly when ``__over_cap``
+    is 0; otherwise ``_finish_report`` recounts the failed records from the
+    array, one extra job only then. Counting the cut here instead needs a
+    prefix sum of the flags per rule, because which errors the cap drops
+    depends on rule order; as aggregate expressions (measured on a 4-core
+    host) shared running sums ran out of heap at 36 rules and unshared
+    ones grew quadratically, past Spark's 64 KB generated-method limit at
+    120 rules."""
+    flags = [f"__hit{i}" for i in range(len(predicates))]
+    row_cols = [
+        F.coalesce(cond, F.lit(False)).cast("int").alias(flag)
+        for flag, (_f, _et, cond) in zip(flags, predicates)
     ]
+    by_type: Dict[str, List] = {}
+    for flag, (_f, et, _c) in zip(flags, predicates):
+        by_type.setdefault(et, []).append(F.col(flag))
+    hits = sum((F.col(f) for f in flags), F.lit(0))
+    aggs = [
+        F.sum(sum(cols[1:], cols[0])).alias(f"__errtype__{et}")
+        for et, cols in by_type.items()
+    ] + [F.count_if(hits > max_errors).alias("__over_cap")]
+    return row_cols, aggs
 
 
 def _array_error_counts(errors_column: str) -> List:
@@ -219,39 +231,50 @@ class ValidationRun:
                 base_bins = {c: s["counts"] for c, s in snapshot.items()}
         return drift_exprs, drift_edges, drift_cats, base_bins
 
-    def _agg_exprs(self, drift_exprs, drift_edges, drift_cats) -> List:
-        """All fused-pass aggregate expressions: verdict counters +
-        error-type counts (finite taxonomy — the batch error summary needs
-        no second scan) + quality aggs + referential misses (vocabularies
-        resolved to literal sets) + drift current-histograms."""
+    def _agg_exprs(
+        self, drift_exprs, drift_edges, drift_cats
+    ) -> Tuple[List, List]:
+        """``(row_cols, aggs)`` of the fused pass. ``row_cols`` are the
+        per-row values the aggregates need (rule hit flags, referential
+        misses, drift bin ids), each computed once in the projection under
+        the aggregate; ``aggs`` only count or collect those columns, plus
+        the verdict counters, the error-type counts (finite taxonomy — the
+        batch error summary needs no second scan) and the quality aggs.
+        Both are applied as ``validated.select("*", *row_cols).agg(*aggs)``
+        (or ``.observe``)."""
         rules = self.contract.quality
         ec = self.compiled.options.errors_column
-        agg_exprs = [
+        aggs = [
             F.count(F.lit(1)).alias("__total"),
-            F.sum(F.col("passed").cast("long")).alias("__passed"),
+            F.count_if(F.col("passed")).alias("__passed"),
         ]
+        parts = []
         if self.compiled.predicates is not None:
-            agg_exprs += _lean_error_counts(
+            parts.append(_lean_error_counts(
                 self.compiled.predicates, self.compiled.options.max_errors
-            )
+            ))
         else:
-            agg_exprs += _array_error_counts(ec)
-        quality_exprs = build_quality_agg_exprs(self.df, rules)
+            aggs += _array_error_counts(ec)
+        aggs += build_quality_agg_exprs(self.df, rules)
         if rules.referential:
             # resolves every vocabulary first: a bad referential rule
             # raises here, before any fact-table job or write
-            quality_exprs += ref_op.fused_vocab_miss_agg(
+            parts.append(ref_op.fused_vocab_miss_agg(
                 self.df, rules.referential, self.engine.vocab_tables
-            )
+            ))
         if drift_edges:
-            quality_exprs += drift_op.multi_histogram_exprs(
-                drift_edges, drift_exprs
+            parts.append(
+                drift_op.multi_histogram_exprs(drift_edges, drift_exprs)
             )
         if drift_cats:
-            quality_exprs += drift_op.categorical_histogram_exprs(
-                drift_cats, drift_exprs
+            parts.append(
+                drift_op.categorical_histogram_exprs(drift_cats, drift_exprs)
             )
-        return agg_exprs + quality_exprs
+        row_cols: List = []
+        for cols, counts in parts:
+            row_cols += cols
+            aggs += counts
+        return row_cols, aggs
 
     def report(self, sample_errors: int = 50) -> BatchReport:
         """One fused agg pass computes schema counters + error-type counts
@@ -265,9 +288,12 @@ class ValidationRun:
             return self._report
         t0 = time.time()
         drift_exprs, drift_edges, drift_cats, base_bins = self._drift_prep()
-        exprs = self._agg_exprs(drift_exprs, drift_edges, drift_cats)
+        row_cols, aggs = self._agg_exprs(drift_exprs, drift_edges, drift_cats)
         # run over the validated frame (it carries the source columns)
-        agg_row = self.validated.agg(*exprs).collect()[0].asDict()
+        agg_row = (
+            self.validated.select("*", *row_cols).agg(*aggs)
+            .collect()[0].asDict()
+        )
         self._report = self._finish_report(
             agg_row, drift_edges, drift_cats, base_bins, t0, sample_errors
         )
@@ -290,9 +316,9 @@ class ValidationRun:
 
         t0 = time.time()
         drift_exprs, drift_edges, drift_cats, base_bins = self._drift_prep()
-        exprs = self._agg_exprs(drift_exprs, drift_edges, drift_cats)
+        row_cols, aggs = self._agg_exprs(drift_exprs, drift_edges, drift_cats)
         obs = Observation(f"contract:{self.contract.name}")
-        observed = self.validated.observe(obs, *exprs)
+        observed = self.validated.select("*", *row_cols).observe(obs, *aggs)
         run_like = replace(self, validated=observed, _report=None)
         from .sources import sinks as _sinks  # local import avoids cycle
 
@@ -458,7 +484,7 @@ class ValidationRun:
     ) -> List[QualityError]:
         """Score drift from the fused current-histogram counts in
         ``agg_row`` vs the baseline histogram: all columns in ONE
-        Arrow-batched applyInPandas job over the tiny histogram relation.
+        mapInPandas job over the tiny histogram relation.
         Numeric columns bucket by quantile edges; categorical ones by the
         baseline's category set (+ __other__) — same decode/score path."""
         rules = self.contract.quality

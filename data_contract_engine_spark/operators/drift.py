@@ -8,12 +8,15 @@ histogram.
 Scale design:
   * bin edges come from ``approx_percentile`` over the baseline — one
     aggregate pass, sketch-based (no sort, no collect of data);
-  * binning the 10^12-row current table is a ``width_bucket`` projection +
-    one groupBy(bin).count() — partial aggregation makes the shuffle tiny
-    (≤ bins rows per partition);
-  * the two histograms are bins-sized (tiny); they join on bin id and the
-    KL/PSI arithmetic runs in a vectorized pandas (Arrow) UDF — the only
-    Python in the pipeline, over ~10s of rows.
+  * binning the 10^12-row current table is a CASE-chain bin id projected
+    once per row, counted per bin inside the engine's fused aggregate
+    (:func:`multi_histogram_exprs`); the standalone path is the same
+    projection + one groupBy(bin).count() — partial aggregation makes the
+    shuffle tiny (≤ bins rows per partition);
+  * the two histograms are bins-sized (tiny); the engine scores every
+    column in one single-partition mapInPandas job
+    (:func:`score_histograms_pandas`) — the only Python in the pipeline,
+    over ~10s of rows.
 
 PSI = Σ (p_i − q_i) · ln(p_i / q_i);  KL(p‖q) = Σ p_i · ln(p_i / q_i),
 with epsilon-smoothed proportions so empty bins stay finite.
@@ -24,7 +27,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-from typing import List, Optional, Sequence
+from typing import List, Optional, Sequence, Tuple
 
 import pandas as pd
 
@@ -60,19 +63,26 @@ def histogram(df: DataFrame, column: str, edges: Sequence[float]) -> DataFrame:
     the explicit quantile edge list with a fused CASE chain — still one
     codegen'd projection.
     """
-    v = F.col(column).cast("double")
-    # build CASE v <= e0 -> 0, v <= e1 -> 1, ..., else len(edges)
-    expr = None
-    for i, e in enumerate(edges):
-        cond = v <= F.lit(float(e))
-        expr = F.when(cond, F.lit(i)) if expr is None else expr.when(cond, F.lit(i))
-    expr = F.lit(0) if expr is None else expr.otherwise(F.lit(len(edges)))
+    expr, v = bin_expr(F.col(column), edges)
     return (
         df.filter(v.isNotNull())
         .select(expr.alias("bin"))
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
+
+
+def _psi_kl_numpy(pdf: pd.DataFrame) -> tuple:
+    """Epsilon-smoothed (PSI, KL) of one histogram frame's ``cur_cnt`` vs
+    ``base_cnt`` columns, vectorized over its rows (bins)."""
+    import numpy as np
+
+    c = pdf["cur_cnt"].to_numpy(dtype="float64")
+    b = pdf["base_cnt"].to_numpy(dtype="float64")
+    p = (c + EPS) / (c.sum() + EPS * len(c))
+    q = (b + EPS) / (b.sum() + EPS * len(b))
+    lr = np.log(p / q)
+    return float(((p - q) * lr).sum()), float((p * lr).sum())
 
 
 def psi_kl_from_histograms(
@@ -87,20 +97,8 @@ def psi_kl_from_histograms(
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
         # one Arrow batch over the bins-sized frame; vectorized numpy math
-        import numpy as np
-
-        c = pdf["cur_cnt"].to_numpy(dtype="float64")
-        b = pdf["base_cnt"].to_numpy(dtype="float64")
-        p = (c + EPS) / (c.sum() + EPS * len(c))
-        q = (b + EPS) / (b.sum() + EPS * len(b))
-        lr = np.log(p / q)
-        return pd.DataFrame(
-            {
-                "psi": [float(((p - q) * lr).sum())],
-                "kl": [float((p * lr).sum())],
-                "bins": [len(c)],
-            }
-        )
+        psi, kl = _psi_kl_numpy(pdf)
+        return pd.DataFrame({"psi": [psi], "kl": [kl], "bins": [len(pdf)]})
 
     rows = (
         joined.groupBy(F.lit(1).alias("__g"))
@@ -305,15 +303,19 @@ def psi_kl_categorical(
     return DriftScore(column=column, psi=psi, kl=kl, bins=len(buckets))
 
 
+def _first_match(conds: Sequence, default: int):
+    """``CASE WHEN conds[0] THEN 0 WHEN conds[1] THEN 1 … ELSE default``."""
+    expr = None
+    for i, cond in enumerate(conds):
+        expr = F.when(cond, i) if expr is None else expr.when(cond, i)
+    return F.lit(default) if expr is None else expr.otherwise(default)
+
+
 def bin_expr(value, edges: Sequence[float]):
     """CASE-chain bin id for one value expression (Column or SQL string);
     codegen-fused. Returns (bin_col, value_col)."""
     v = (F.expr(value) if isinstance(value, str) else value).cast("double")
-    expr = None
-    for i, e in enumerate(edges):
-        cond = v <= F.lit(float(e))
-        expr = F.when(cond, F.lit(i)) if expr is None else expr.when(cond, F.lit(i))
-    return (F.lit(0) if expr is None else expr.otherwise(F.lit(len(edges)))), v
+    return _first_match([v <= F.lit(float(e)) for e in edges], len(edges)), v
 
 
 def multi_quantile_edges(
@@ -341,44 +343,47 @@ def multi_quantile_edges(
     return out
 
 
-def multi_histogram_exprs(edges_by_name: dict, exprs: dict) -> List:
-    """Fused per-bin count aggregate expressions for many columns —
-    meant to ride along in the engine's single global agg pass.
-
-    Aliases: ``__driftbin__{name}__{i}``.
+def multi_histogram_exprs(
+    edges_by_name: dict, exprs: dict
+) -> Tuple[List, List]:
+    """``(row_cols, aggs)`` of the fused per-bin counts for many columns,
+    meant to ride along in the engine's single global agg pass: one row
+    column ``__bin__{name}`` per column (its CASE-chain bin id, NULL for a
+    NULL value), projected under the aggregate so the chain runs once per
+    row, and one ``count_if(bin == i)`` per bin, aliased
+    ``__driftbin__{name}__{i}``.
     """
-    out = []
+    row_cols, aggs = [], []
     for name, edges in edges_by_name.items():
         b, v = bin_expr(exprs[name], edges)
-        for i in range(len(edges) + 1):
-            out.append(
-                F.sum(
-                    F.when(v.isNotNull() & (b == i), 1).otherwise(0)
-                ).alias(f"__driftbin__{name}__{i}")
-            )
-    return out
+        row_cols.append(F.when(v.isNotNull(), b).alias(f"__bin__{name}"))
+        aggs += _bin_counts(name, len(edges) + 1)
+    return row_cols, aggs
 
 
-def categorical_histogram_exprs(cats_by_name: dict, exprs: dict) -> List:
-    """Categorical twin of :func:`multi_histogram_exprs`: one count per
-    baseline category plus a final ``__other__`` bucket (index len(cats))
-    for values outside the baseline's category space — same
-    ``__driftbin__{name}__{i}`` aliases, so the decode path is shared."""
-    out = []
+def categorical_histogram_exprs(
+    cats_by_name: dict, exprs: dict
+) -> Tuple[List, List]:
+    """Categorical twin of :func:`multi_histogram_exprs`: the bucket id is
+    the baseline category's index, or len(cats) (the ``__other__`` bucket)
+    for a value outside the baseline's category space — same row column
+    and ``__driftbin__{name}__{i}`` aliases, so the decode path is
+    shared."""
+    row_cols, aggs = [], []
     for name, cats in cats_by_name.items():
         v = F.expr(exprs[name]).cast("string")
-        for i, cat in enumerate(cats):
-            out.append(
-                F.sum(F.when(v == F.lit(cat), 1).otherwise(0)).alias(
-                    f"__driftbin__{name}__{i}"
-                )
-            )
-        out.append(
-            F.sum(
-                F.when(v.isNotNull() & ~v.isin(list(cats)), 1).otherwise(0)
-            ).alias(f"__driftbin__{name}__{len(cats)}")
-        )
-    return out
+        bucket = _first_match([v == F.lit(c) for c in cats], len(cats))
+        row_cols.append(F.when(v.isNotNull(), bucket).alias(f"__bin__{name}"))
+        aggs += _bin_counts(name, len(cats) + 1)
+    return row_cols, aggs
+
+
+def _bin_counts(name: str, n_bins: int) -> List:
+    b = F.col(f"__bin__{name}")
+    return [
+        F.count_if(b == i).alias(f"__driftbin__{name}__{i}")
+        for i in range(n_bins)
+    ]
 
 
 def decode_histogram_row(row: dict, name: str, n_bins: int) -> List[int]:
@@ -388,45 +393,44 @@ def decode_histogram_row(row: dict, name: str, n_bins: int) -> List[int]:
 def score_histograms_pandas(
     spark, per_column: dict
 ) -> dict:
-    """Score MANY columns' drift in ONE Arrow-batched applyInPandas job.
+    """Score MANY columns' drift in ONE Python job.
 
     ``per_column``: {name: (cur_counts, base_counts)} — tiny lists.
     Returns {name: DriftScore}. The pandas/Arrow UDF is the designated
     place for the KL/PSI arithmetic (north rule); input is the bins-sized
-    histogram relation, never row data.
+    histogram relation, never row data. The relation is built from an
+    Arrow table (a JVM-side local relation, no Python-worker pass) and
+    scored by one ``mapInPandas`` over a single partition (no shuffle),
+    each column's rows in bin order.
     """
-    import pandas as pd
+    import pyarrow as pa
 
-    rows = []
-    for name, (cur, base) in per_column.items():
-        for i, (c, b) in enumerate(zip(cur, base)):
-            rows.append((name, i, int(c), int(b)))
+    rows = [
+        (name, i, int(c), int(b))
+        for name, (cur, base) in per_column.items()
+        for i, (c, b) in enumerate(zip(cur, base))
+    ]
     if not rows:
         return {}
-    hist = spark.createDataFrame(
-        rows, "column string, bin int, cur_cnt long, base_cnt long"
-    )
+    names, bins, curs, bases = zip(*rows)
+    hist = spark.createDataFrame(pa.table({
+        "column": pa.array(names, pa.string()),
+        "bin": pa.array(bins, pa.int32()),
+        "cur_cnt": pa.array(curs, pa.int64()),
+        "base_cnt": pa.array(bases, pa.int64()),
+    }))
 
-    def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        c = pdf["cur_cnt"].to_numpy(dtype="float64")
-        b = pdf["base_cnt"].to_numpy(dtype="float64")
-        p = (c + EPS) / (c.sum() + EPS * len(c))
-        q = (b + EPS) / (b.sum() + EPS * len(b))
-        lr = np.log(p / q)
-        return pd.DataFrame(
-            {
-                "column": [key[0]],
-                "psi": [float(((p - q) * lr).sum())],
-                "kl": [float((p * lr).sum())],
-                "bins": [len(c)],
-            }
+    def score(batches):
+        pdf = pd.concat(list(batches)).sort_values(["column", "bin"])
+        yield pd.DataFrame(
+            [(name, *_psi_kl_numpy(g), len(g))
+             for name, g in pdf.groupby("column", sort=False)],
+            columns=["column", "psi", "kl", "bins"],
         )
 
     out = (
-        hist.groupBy("column")
-        .applyInPandas(score, "column string, psi double, kl double, bins long")
+        hist.coalesce(1)
+        .mapInPandas(score, "column string, psi double, kl double, bins long")
         .collect()
     )
     return {
@@ -470,10 +474,12 @@ def baseline_snapshot(
         cats[c] = [r["cat"] for r in ordered]
     if not edges and not cats:
         return {}
-    agg_exprs = multi_histogram_exprs(edges, exprs) + categorical_histogram_exprs(
-        cats, exprs
+    num_cols, num_aggs = multi_histogram_exprs(edges, exprs)
+    cat_cols, cat_aggs = categorical_histogram_exprs(cats, exprs)
+    row = (
+        df.select(*num_cols, *cat_cols).agg(*num_aggs, *cat_aggs)
+        .collect()[0].asDict()
     )
-    row = df.agg(*agg_exprs).collect()[0].asDict()
     out = {
         c: {
             "edges": list(edges[c]),

@@ -17,7 +17,7 @@ required-field rule's job.
 
 from __future__ import annotations
 
-from typing import Any, Dict, Iterable, List, Optional
+from typing import Any, Dict, Iterable, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
@@ -57,19 +57,23 @@ def fused_vocab_miss_agg(
     referential: Dict[str, Dict[str, Any]],
     vocab_tables: Dict[str, DataFrame],
     n_examples: int = 5,
-) -> List[Column]:
-    """Aggregate expressions for the engine's fused pass over ``df``, per
-    referential column: ``__refbad__{col}`` (miss count) and
-    ``__refex__{col}`` (≤ ``n_examples`` sorted misses), decoded by
-    ``quality.aggregates.decode_quality_row``. A ``table:`` vocabulary
-    comes from ``vocab_tables``, else the Spark catalog, and is read once:
-    at most MAX_VOCAB_VALUES + 1 non-null values of its key column. Raises
-    before any fact-table job on a column missing from ``df``, a table
-    over the bound, or a table that resolves nowhere."""
+) -> Tuple[List[Column], List[Column]]:
+    """``(row_cols, aggs)`` for the engine's fused pass over ``df``, per
+    referential column: the row column ``__miss__{col}`` (the non-null
+    value is outside the vocabulary), projected under the aggregate so the
+    set probe runs once per row, and the aggregates ``__refbad__{col}``
+    (miss count) and ``__refex__{col}`` (≤ ``n_examples`` sorted misses)
+    over it, decoded by ``quality.aggregates.decode_quality_row``. A
+    ``table:`` vocabulary comes from ``vocab_tables``, else the Spark
+    catalog, and is read once: at most MAX_VOCAB_VALUES + 1 non-null
+    values of its key column. Raises before any fact-table job on a column
+    missing from ``df``, a table over the bound, or a table that resolves
+    nowhere."""
     missing = [c for c in referential if c not in df.columns]
     if missing:
         raise ContractError(f"referential columns {missing} not in the input")
-    exprs: List[Column] = []
+    row_cols: List[Column] = []
+    aggs: List[Column] = []
     for column, spec in referential.items():
         if "values" in spec:
             values = spec["values"]
@@ -95,30 +99,17 @@ def fused_vocab_miss_agg(
         # NULL leaves the set: `x IN (..., NULL)` is NULL for a miss; an
         # empty set makes every non-null value a miss
         values = [v for v in values if v is not None]
-        bad = F.col(column).isNotNull() & ~F.col(column).isin(*values)
-        misses = F.collect_set(F.when(bad, F.col(column).cast("string")))
-        exprs += [
-            F.sum(bad.cast("long")).alias(f"__refbad__{column}"),
+        miss = f"__miss__{column}"
+        row_cols.append(
+            (F.col(column).isNotNull() & ~F.col(column).isin(*values))
+            .alias(miss)
+        )
+        misses = F.collect_set(
+            F.when(F.col(miss), F.col(column).cast("string"))
+        )
+        aggs += [
+            F.count_if(F.col(miss)).alias(f"__refbad__{column}"),
             F.slice(F.sort_array(misses), 1, n_examples)
             .alias(f"__refex__{column}"),
         ]
-    return exprs
-
-
-def referential_violations(
-    df: DataFrame,
-    column: str,
-    vocab: DataFrame,
-    key_columns: Iterable[str],
-    contract_id: str = "contract",
-    vocab_column: Optional[str] = None,
-) -> DataFrame:
-    """Violation rows (contract_id, rule, field, value, key columns...)."""
-    bad = invalid_references(df, column, vocab, vocab_column)
-    return bad.select(
-        F.lit(contract_id).alias("contract_id"),
-        F.lit("REFERENTIAL").alias("rule"),
-        F.lit(column).alias("field"),
-        F.col(column).cast("string").alias("value"),
-        *[F.col(k) for k in key_columns],
-    )
+    return row_cols, aggs

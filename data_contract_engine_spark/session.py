@@ -16,7 +16,15 @@ def build_session(
     """AQE on (skew-join + partition coalescing), Arrow on, UTC session
     timezone (deterministic timestamp semantics for oracle comparison),
     shuffle partitions sized to the parallelism level instead of the
-    200 default."""
+    200 default.
+
+    PySpark's per-call call-site capture is off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``): with it on,
+    every ``functions.*`` and Column call walks the Python stack and makes
+    JVM calls, and one validation makes hundreds of them. The cost is that
+    analysis errors lose their Python call-site "DataFrame" context; pass
+    the setting as ``true`` in ``extra_conf`` to get it back (it is read
+    once per process, on the first such call)."""
     master = master or os.environ.get("SPARK_MASTER", "local[*]")
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if shuffle_partitions is None:
@@ -40,6 +48,7 @@ def build_session(
         # catalog's manifest stats (SnapshotParquetCatalog)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )

@@ -132,10 +132,12 @@ def drift_monitor(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if not (edges or cats) or not batch_df.take(1):
             return
-        agg_exprs = drift_op.multi_histogram_exprs(
-            edges, exprs
-        ) + drift_op.categorical_histogram_exprs(cats, exprs)
-        row = batch_df.agg(*agg_exprs).collect()[0].asDict()
+        num_cols, num_aggs = drift_op.multi_histogram_exprs(edges, exprs)
+        cat_cols, cat_aggs = drift_op.categorical_histogram_exprs(cats, exprs)
+        row = (
+            batch_df.select(*num_cols, *cat_cols).agg(*num_aggs, *cat_aggs)
+            .collect()[0].asDict()
+        )
         n_bins = {c: len(e) + 1 for c, e in edges.items()}
         n_bins.update({c: len(v) + 1 for c, v in cats.items()})
         per_col = {

@@ -81,6 +81,22 @@ def main():
         "```\n" + trim(plan_of(run.validated.select("passed"))) + "```\n"
     )
 
+    row_cols, aggs = run._agg_exprs(*run._drift_prep()[:3])
+    out.append(
+        "## 1b. Fused report aggregate — each rule once per row\n\n"
+        "`report()`'s aggregate runs over `validated.select('*', "
+        "*row_cols)`: one `__hit<i>` int flag per rule (sharing each "
+        "condition with `passed` through the projection's common-"
+        "subexpression elimination, inside the WholeStageCodegen span), "
+        "and the aggregate only sums those narrow columns — per error "
+        "type, plus `__over_cap` as a `count_if` over their sum. "
+        "`execute()` observes the same aggregates in a `CollectMetrics` "
+        "node over the same projection.\n\n"
+        "```\n"
+        + trim(plan_of(run.validated.select("*", *row_cols).agg(*aggs)))
+        + "```\n"
+    )
+
     out.append(
         "## 2. Violations artifact (prefiltered error materialization)\n\n"
         "The cheap `passed` predicate prunes passing rows BEFORE the "
@@ -133,21 +149,25 @@ def main():
         "search", "browser", "python", "sql", "calculator", "shell",
         "editor", "fetch", "maps", "calendar", "email", "translate",
     ], "tool")
+    ref_cols, ref_aggs = ref_op.fused_vocab_miss_agg(
+        tr,
+        {"tool": {"table": "tools", "column": "tool"},
+         "role": {"values": ["system", "user", "assistant", "tool"]}},
+        {"tools": tools},
+    )
     out.append(
         "## 4b. Referential rules inside the fused aggregate — no join\n\n"
         "Every vocabulary, literal (`role`) or table-backed (`tool`, read "
         "once on the driver: ≤ `MAX_VOCAB_VALUES` + 1 rows of its key "
         "column), becomes a literal set in the same global "
         "`ObjectHashAggregate` that counts misses + collects ≤5 examples "
-        "per column: one fact scan, no join, no fact shuffle. Above 10 "
+        "per column: one fact scan, no join, no fact shuffle. The set "
+        "probe is the `__miss__` column of the codegen'd projection under "
+        "the aggregate, so it runs once per row. Above 10 "
         "values `OptimizeIn` turns the set into a hashed `InSet`; the "
         "4-value role set stays a plain `IN`.\n\n"
         "```\n"
-        + trim(plan_of(tr.agg(*ref_op.fused_vocab_miss_agg(
-            tr,
-            {"tool": {"table": "tools", "column": "tool"},
-             "role": {"values": ["system", "user", "assistant", "tool"]}},
-            {"tools": tools}))))
+        + trim(plan_of(tr.select("*", *ref_cols).agg(*ref_aggs)))
         + "```\n"
     )
 

@@ -246,3 +246,33 @@ def test_curate_resumable_kill_and_resume(spark, tmp_path):
         df, bench, store2, "run1", "part", cand, **kw2
     )
     assert st5.pending_before == 0 and out5.count() == 0
+
+
+def test_null_partition_validated_once(spark, tmp_path):
+    """Rows whose partition value is NULL are validated, checkpointed under
+    a NULL key, and skipped on the next runs (`IN (..., NULL)` never
+    matches a NULL value, so the NULL partition needs its own test)."""
+    eng = ContractEngine(spark)
+    contract = parse_contract_yaml(
+        'contract_version: "1.0"\nschema:\n  v: {type: integer, min: 0}\n',
+        name="null-part",
+    )
+    df = spark.createDataFrame(
+        [("a", 1), (None, 2), (None, -1)], "part string, v int"
+    )
+    store = CheckpointStore(spark, str(tmp_path / "ckpt"))
+
+    def run():
+        return validate_resumable(
+            eng, df, contract, store, run_id="r", partition_col="part",
+            key_columns=["v"], ts_col=None,
+        )
+
+    r1 = run()
+    assert (r1.pending_before, r1.validated_now) == (2, 2)
+    rep = r1.run.report()
+    assert (rep.total_records, rep.failed) == (3, 1)
+    for _ in range(2):
+        r = run()
+        assert (r.pending_before, r.validated_now, r.skipped) == (0, 0, 2)
+        assert r.run is None

@@ -85,3 +85,9 @@ def test_full_lifecycle(spark, tmp_path):
     assert days["2025-05-02"]["failed_count"] == 2
     summary = rollup.platform_summary(m)
     assert summary["total_validations"] == 5
+
+
+def test_build_session_disables_call_site_capture(spark):
+    """Engine sessions turn off PySpark's per-call call-site capture."""
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"

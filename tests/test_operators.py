@@ -132,8 +132,8 @@ def test_baseline_snapshot_matches_dataframe_path(spark):
         multi_histogram_exprs,
     )
 
-    row = cur.agg(*multi_histogram_exprs({"x": snap["x"]["edges"]}, {"x": "x"})) \
-        .collect()[0].asDict()
+    row_cols, aggs = multi_histogram_exprs({"x": snap["x"]["edges"]}, {"x": "x"})
+    row = cur.select(*row_cols).agg(*aggs).collect()[0].asDict()
     cur_counts = decode_histogram_row(row, "x", len(snap["x"]["edges"]) + 1)
     scores = score_histograms_pandas(
         spark, {"x": (cur_counts, snap["x"]["counts"])}
@@ -141,6 +141,35 @@ def test_baseline_snapshot_matches_dataframe_path(spark):
     df_score = psi_kl(cur, base, "x", bins=10)
     assert scores["x"].psi == pytest.approx(df_score.psi, rel=1e-9)
     assert scores["x"].kl == pytest.approx(df_score.kl, rel=1e-9)
+
+
+def test_score_histograms_one_job_matches_exact(spark):
+    """All columns are scored by ONE Spark job (an Arrow-built local
+    relation and one mapInPandas, no shuffle), each equal to the
+    driver-side arithmetic."""
+    from data_contract_engine_spark.operators.drift import (
+        psi_kl_exact,
+        score_histograms_pandas,
+    )
+
+    per_col = {
+        "x": ([5, 0, 12, 40, 3], [10, 10, 10, 10, 10]),
+        "cat": ([7, 1, 0], [2, 5, 9]),
+    }
+    sc = spark.sparkContext
+    sc.setJobGroup("score_histograms", "drift scoring")
+    try:
+        scores = score_histograms_pandas(spark, per_col)
+        jobs = sc.statusTracker().getJobIdsForGroup("score_histograms")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) == 1
+    for name, (cur, base) in per_col.items():
+        psi, kl = psi_kl_exact(cur, base)
+        assert scores[name].bins == len(cur)
+        assert scores[name].psi == pytest.approx(psi, rel=1e-12)
+        assert scores[name].kl == pytest.approx(kl, rel=1e-12)
 
 
 def test_engine_uses_snapshot_without_baseline_scans(spark):

@@ -672,3 +672,118 @@ def test_multi_uniqueness_duplicate_key_specs(spark):
     (n_single, _), = single.values()
     for n, _top in doubled.values():
         assert n == n_single == 1
+
+
+FUSED_YAML = """
+contract_version: "1.0"
+schema:
+  k: {type: string, required: true, pattern: "^k_\\\\d+$"}
+  name: {type: string, required: false, min_length: 2, max_length: 20}
+  role: {type: string, required: false, enum: [user, assistant]}
+  v: {type: float, required: false, min: 0}
+quality_rules:
+  referential:
+    role: {values: [user, assistant]}
+  drift:
+    v: {metric: psi, threshold: 0.1, bins: 4}
+    role: {type: categorical, metric: psi, threshold: 0.1, bins: 4}
+"""
+
+
+def _fused_engine(spark):
+    from data_contract_engine_spark.operators.drift import baseline_snapshot
+
+    base = spark.createDataFrame(
+        [(f"k_{i}", "nm", ["user", "assistant"][i % 2], float(i % 7))
+         for i in range(40)],
+        "k string, name string, role string, v double",
+    )
+    snap = baseline_snapshot(
+        base, {"v": "v", "role": "role"}, bins=4, categorical=["role"]
+    )
+    return ContractEngine(spark, drift_baseline_snapshot=snap, now_epoch=NOW)
+
+
+def _report_fields(rep):
+    q = rep.quality
+    return (
+        rep.total_records, rep.passed, rep.failed, rep.pass_rate,
+        rep.errors_summary, rep.total_violation_rows,
+        None if q is None else (
+            q.passed, q.quality_score,
+            [(e.rule_type, e.message, e.details) for e in q.errors],
+        ),
+    )
+
+
+def test_execute_observes_only_projected_columns(spark, tmp_path, monkeypatch):
+    """The observed aggregates of execute()'s write plan only count columns
+    projected under them: no rule condition (RLIKE, length), no drift
+    CASE chain is re-evaluated inside CollectMetrics."""
+    from data_contract_engine_spark import parse_contract_yaml
+    from data_contract_engine_spark.sources import sinks
+
+    contract = parse_contract_yaml(FUSED_YAML, name="fused")
+    df = spark.createDataFrame(
+        [("k_1", "ab", "user", 1.0), ("x", "a", "robot", -2.0)],
+        "k string, name string, role string, v double",
+    )
+    plans = []
+    write = sinks.write_violations
+
+    def capture(viol, *args, **kwargs):
+        plans.append(viol._jdf.queryExecution().executedPlan().toString())
+        return write(viol, *args, **kwargs)
+
+    monkeypatch.setattr(sinks, "write_violations", capture)
+    run = _fused_engine(spark).validate(df, contract, key_columns=["k"])
+    rep = run.execute(str(tmp_path / "viol"))
+    assert rep.errors_summary == {
+        "PATTERN_MISMATCH": 1, "LENGTH_TOO_SHORT": 1, "ENUM_MISMATCH": 1,
+        "VALUE_TOO_SMALL": 1,
+    }
+    (metrics,) = [
+        line for line in plans[0].splitlines() if "CollectMetrics" in line
+    ]
+    for rule_text in ("RLIKE", "length(", "CASE WHEN (", "<="):
+        assert rule_text not in metrics
+    for column in ("__hit0", "__miss__role"):
+        assert column in metrics
+    # the bin ids are projected below; count_if's `bin == i` tests are
+    # projected with them as common expressions
+    assert "AS __bin__v" in plans[0] and "AS __bin__role" in plans[0]
+
+
+@pytest.mark.parametrize("rows", [[], [("k_1", None, None, None)] * 3],
+                         ids=["empty", "all_null"])
+def test_fused_counts_on_empty_and_null_input(spark, tmp_path, rows):
+    """count_if returns 0 where a sum over no rows returned NULL: the
+    report is the same, from report() and from execute()."""
+    from data_contract_engine_spark import parse_contract_yaml
+    from data_contract_engine_spark.operators.drift import psi_kl_exact
+
+    contract = parse_contract_yaml(FUSED_YAML, name="fused")
+    df = spark.createDataFrame(
+        rows, "k string, name string, role string, v double"
+    )
+    eng = _fused_engine(spark)
+    rep = eng.validate(df, contract, key_columns=["k"]).report()
+    executed = eng.validate(df, contract, key_columns=["k"]).execute(
+        str(tmp_path / "viol")
+    )
+    assert _report_fields(rep) == _report_fields(executed)
+    n = len(rows)
+    assert (rep.total_records, rep.passed, rep.failed) == (n, n, 0)
+    assert rep.errors_summary == {} and rep.total_violation_rows == 0
+    if not rows:
+        assert rep.quality is None
+        return
+    # NULL is never a referential miss; every drift bin counts 0
+    assert all(e.rule_type == "DRIFT" for e in rep.quality.errors)
+    drift = {e.details["field"]: e.details["psi"] for e in rep.quality.errors}
+    expected = {}
+    for column, snap in eng.drift_baseline_snapshot.items():
+        psi, _kl = psi_kl_exact([0] * len(snap["counts"]), snap["counts"])
+        if psi > 0.1:
+            expected[column] = psi
+    assert expected and drift == pytest.approx(expected, rel=1e-12)
