@@ -26,9 +26,10 @@ Design notes for the 10^12-turn deployment:
   * the pending-partition filter is a pushed-down predicate on the
     partition column, so skipped partitions are pruned at the scan —
     resuming a 95%-done run reads ~5% of the data;
-  * violations should be written partitioned by the same key
-    (``partitionBy(partition_col)``) so a re-run's overwrite of one
-    partition is atomic-per-partition (dynamic partition overwrite).
+  * a partition flips to DONE only after its report is finished (every
+    rule ran; with ``violations_out``, ``ValidationRun.execute`` wrote its
+    violations partitioned by the same key, dynamic overwrite), so DONE
+    means every rule was evaluated and a crash before the flip re-runs it.
 """
 
 from __future__ import annotations
@@ -133,12 +134,12 @@ def validate_resumable(
     table metadata (Iceberg partition listing) to avoid the discovery
     scan; otherwise one distinct-scan computes it.
 
-    ``violations_out``: when set, violation rows are written (partitioned
-    by ``partition_col``, dynamic overwrite) BEFORE the checkpoint rows
-    flip to DONE — a crash between the two re-validates those partitions
-    on resume (idempotent overwrite) instead of leaving checkpointed
-    partitions with missing violations. With Iceberg both writes join one
-    transaction.
+    The report is finished before the checkpoint rows flip to DONE, so
+    DONE means every rule was evaluated: ``run.execute`` when
+    ``violations_out`` is set (rows partitioned by ``partition_col``,
+    dynamic overwrite; with Iceberg it joins the flip's transaction),
+    else ``run.report()``. A rule that raises leaves every partition
+    pending; ``result.run.report()`` returns the report without a job.
     """
     lin = lineage_hash(contract)
     if all_partitions is None:
@@ -163,16 +164,9 @@ def validate_resumable(
     run = engine.validate(sub, contract, key_columns=key_columns)
 
     if violations_out:
-        from .sources import sinks
-
-        # ALWAYS project the partition column into the violations frame
-        # (it exists in run.validated) so the write is partitioned by it —
-        # a dynamic-overwrite re-run then replaces only its own partitions.
-        # (Previously this silently fell back to a full unpartitioned
-        # overwrite when partition_col was not among the key columns,
-        # clobbering completed partitions' violations on resume.)
-        viol = run.violations(extra_cols=[partition_col])
-        sinks.write_violations(viol, violations_out, [partition_col])
+        run.execute(violations_out, [partition_col], sample_errors=50)
+    else:
+        run.report()
 
     agg_cols = [
         F.count(F.lit(1)).alias("total"),

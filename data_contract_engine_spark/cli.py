@@ -85,8 +85,8 @@ def cmd_validate(args) -> int:
             )
         else:
             store = CheckpointStore(spark, args.checkpoint)
-        # violations write happens INSIDE the resumable protocol (before
-        # the checkpoint flips) for crash-safe resume ordering
+        # the report (and the violations write) finishes inside the
+        # resumable protocol, before any partition is checkpointed DONE
         res = validate_resumable(
             engine,
             df,
@@ -105,13 +105,11 @@ def cmd_validate(args) -> int:
         run = res.run
     else:
         run = engine.validate(df, contract, key_columns=keys)
+        if args.violations_out:
+            part_cols = [args.partition_col] if args.partition_col else None
+            run.execute(args.violations_out, part_cols)
 
     rep = run.report()
-    if args.violations_out and not args.checkpoint:
-        # non-resumable path: plain write (resumable runs already wrote
-        # them inside validate_resumable, before the checkpoint flip)
-        part_cols = [args.partition_col] if args.partition_col else None
-        sinks.write_violations(run.violations(), args.violations_out, part_cols)
     if args.summary_out:
         sinks.append_run_summary(
             spark, args.summary_out, args.run_id, contract.name,

@@ -149,9 +149,9 @@ class ValidationRun:
         (contract_id, key columns..., field, error_type, message, value,
         expected) — the distributed sink artifact.
 
-        ``extra_cols``: additional source columns to carry through (e.g. a
-        partition column needed for a partitioned sink write — see
-        :func:`data_contract_engine_spark.checkpoint.validate_resumable`).
+        ``extra_cols``: source columns to carry through, e.g. partition
+        columns; :meth:`execute`, the one writer of this artifact, passes
+        its ``partition_cols`` here.
         """
         carried = list(self.key_columns) + [
             c for c in extra_cols if c not in self.key_columns
@@ -283,7 +283,8 @@ class ValidationRun:
         read of that table, never of the fact table) + drift
         current-histograms; only uniqueness (its own shuffle) and the gated
         sample job add scans. See :meth:`execute` for the zero-extra-scan
-        variant that also writes the violations artifact."""
+        variant that also writes the violations artifact; after it, this
+        returns the report :meth:`execute` computed."""
         if self._report is not None:
             return self._report
         t0 = time.time()
@@ -311,7 +312,11 @@ class ValidationRun:
         input, and referential rules included. Remaining extra jobs:
         vocabulary-table reads (before the write; they read only the vocab
         tables), uniqueness (needs its own shuffle) and drift scoring (tiny
-        histogram relation)."""
+        histogram relation). It is the one writer of the violations
+        artifact: ``partition_cols`` are carried into the rows (key columns
+        or not) and partition the write with dynamic overwrite. Every rule
+        resolves before the write, so a bad rule raises with nothing
+        written; a later :meth:`report` returns this report, with no job."""
         from pyspark.sql import Observation
 
         t0 = time.time()
@@ -323,7 +328,9 @@ class ValidationRun:
         from .sources import sinks as _sinks  # local import avoids cycle
 
         _sinks.write_violations(
-            run_like.violations(), violations_path, partition_cols
+            run_like.violations(extra_cols=partition_cols or ()),
+            violations_path,
+            partition_cols,
         )
         agg_row = dict(obs.get)
         self._report = self._finish_report(

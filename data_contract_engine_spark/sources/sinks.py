@@ -30,6 +30,8 @@ def write_violations(
     path: str,
     partition_cols: Optional[Sequence[str]] = None,
 ) -> None:
+    """Overwrite ``path``; with ``partition_cols``, only the partitions
+    present (``ValidationRun.execute``'s violations, quarantine rows)."""
     w = violations.write.mode("overwrite")
     if partition_cols:
         # dynamic overwrite: only partitions present in this run are replaced
@@ -75,13 +77,7 @@ def write_quarantine(
     array), for reprocessing/repair pipelines — complements the exploded
     violations artifact. Cheap under lean predicates: the error structs
     are only materialized for the failing rows."""
-    failed = run._failed_with_errors()
-    w = failed.write.mode("overwrite")
-    if partition_cols:
-        w = w.option("partitionOverwriteMode", "dynamic").partitionBy(
-            *partition_cols
-        )
-    w.parquet(path)
+    write_violations(run._failed_with_errors(), path, partition_cols)
 
 
 def expire_results(

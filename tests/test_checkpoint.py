@@ -2,6 +2,7 @@
 unfinished partitions; lineage change invalidates old checkpoints."""
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from data_contract_engine_spark import ContractEngine, parse_contract_yaml
@@ -171,6 +172,93 @@ def test_resumable_violations_partitioned_when_partition_col_not_a_key(
     )
     v2 = spark.read.parquet(vout)
     assert {r["conv_id"] for r in v2.collect()} == {"conv_3"}
+
+
+def test_execute_partitions_by_non_key_column(spark, tmp_path):
+    """execute(path, partition_cols) carries a partition column that is
+    not a key column into the written rows and partitions the write by
+    it; the written rows are the report's violation rows."""
+    rows = [
+        (f"c{i % 3}", i if i % 4 else -i - 1, f"2025-0{1 + i // 6}")
+        for i in range(12)
+    ]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, month string")
+    run = ContractEngine(spark).validate(
+        df, parse_contract_yaml(CONTRACT, name="by-month"),
+        key_columns=["conv_id", "turn_idx"],
+    )
+    out = tmp_path / "viol"
+    rep = run.execute(str(out), ["month"])
+    assert rep.total_violation_rows == 3  # turn_idx -1, -5, -9
+    assert spark.read.parquet(str(out)).count() == rep.total_violation_rows
+    per_month = {
+        d.name: spark.read.parquet(str(d)).count()
+        for d in out.iterdir() if d.is_dir()
+    }
+    assert per_month == {"month=2025-01": 2, "month=2025-02": 1}
+
+
+BAD_REFERENTIAL = CONTRACT + """quality_rules:
+  referential:
+    conv_id: {table: no_such_vocab_table, column: conv_id}
+"""
+
+
+@pytest.mark.parametrize("with_violations", [True, False],
+                         ids=["violations_out", "report_only"])
+def test_bad_rule_stops_resumable_run_before_any_write(
+    spark, data, tmp_path, with_violations
+):
+    """A rule that cannot be evaluated (an unresolvable referential table)
+    raises from validate_resumable before any violation row or checkpoint
+    row is written, so every partition stays pending."""
+    contract = parse_contract_yaml(BAD_REFERENTIAL, name="bad-ref")
+    store = CheckpointStore(spark, str(tmp_path / "ck"))
+    vout = tmp_path / "viol"
+    kw = dict(
+        run_id="r", partition_col="conv_id",
+        key_columns=["conv_id", "turn_idx"], ts_col=None,
+        violations_out=str(vout) if with_violations else None,
+    )
+    with pytest.raises(AnalysisException, match="no_such_vocab_table"):
+        validate_resumable(ContractEngine(spark), data, contract, store, **kw)
+    assert not vout.exists()
+    assert store.done_partitions("r", lineage_hash(contract)) == []
+
+    # once the table resolves, the next call still finds all 4 pending
+    fixed = ContractEngine(spark, vocab_tables={
+        "no_such_vocab_table": data.select("conv_id").distinct(),
+    })
+    res = validate_resumable(fixed, data, contract, store, **kw)
+    assert (res.pending_before, res.validated_now, res.skipped) == (4, 4, 0)
+
+
+def test_resumable_report_needs_no_second_job(spark, data, tmp_path):
+    """validate_resumable finishes the report in the violations write, so
+    ``result.run.report()`` starts no Spark job; it agrees with this run's
+    checkpoint rows and with the rows written, and keeps its samples."""
+    store = CheckpointStore(spark, str(tmp_path / "ck"))
+    vout = str(tmp_path / "viol")
+    res = validate_resumable(
+        ContractEngine(spark), data,
+        parse_contract_yaml(CONTRACT, name="ckpt-one-job"), store,
+        run_id="r", partition_col="conv_id",
+        key_columns=["conv_id", "turn_idx"], ts_col=None,
+        violations_out=vout,
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("resumable_report", "report after validate_resumable")
+    try:
+        rep = res.run.report()
+        jobs = sc.statusTracker().getJobIdsForGroup("resumable_report")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+    checkpointed = sum(r["total"] for r in store.progress("r").collect())
+    assert rep.total_records == checkpointed == 40
+    assert rep.total_violation_rows == spark.read.parquet(vout).count() == 1
+    assert [e["error_type"] for e in rep.sample_errors] == ["VALUE_TOO_SMALL"]
 
 
 def test_curate_resumable_kill_and_resume(spark, tmp_path):

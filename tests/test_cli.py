@@ -59,6 +59,50 @@ def test_validate_command_end_to_end(spark, tmp_path, capsys, monkeypatch):
     assert s.read.parquet(str(tmp_path / "summary")).count() == 1
 
 
+def test_validate_without_checkpoint_writes_violations(spark, tmp_path,
+                                                       capsys, monkeypatch):
+    """The non-resumable path writes its violations through execute(),
+    partitioned by a column that is not a key column; the rows written
+    are the report's error counts."""
+    monkeypatch.setenv("DCE_CLI_KEEP_SESSION", "1")
+    rows = [
+        (f"c{i % 3}", i if i % 5 else -i - 1, "bot" if i % 4 else "user")
+        for i in range(20)
+    ]
+    src = str(tmp_path / "turns.parquet")
+    spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string"
+    ).write.parquet(src)
+    contract = tmp_path / "contract.yaml"
+    contract.write_text(
+        'contract_version: "1.0"\n'
+        "schema:\n"
+        "  conv_id: {type: string, required: true}\n"
+        "  turn_idx: {type: integer, required: true, min: 0}\n"
+        "  role: {type: string, enum: [user, assistant]}\n"
+    )
+    vout = tmp_path / "viol"
+    rc = cli.main(
+        [
+            "validate",
+            "--input", src,
+            "--contract", str(contract),
+            "--run-id", "test-cli-plain",
+            "--key-columns", "conv_id,turn_idx",
+            "--partition-col", "role",
+            "--violations-out", str(vout),
+        ]
+    )
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    # turn_idx < 0 at i = 0, 5, 10, 15; role "bot" on the 15 rows i % 4 != 0
+    assert out["errors_summary"] == {"VALUE_TOO_SMALL": 4, "ENUM_MISMATCH": 15}
+    assert spark.read.parquet(str(vout)).count() == 19
+    assert {d.name for d in vout.iterdir() if d.is_dir()} == {
+        "role=bot", "role=user"
+    }
+
+
 def test_package_zip(tmp_path):
     import sys
 
