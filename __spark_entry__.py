@@ -214,41 +214,31 @@ def q_freshness(spark, sf_dir):
 
 
 def q_drift_histogram(spark, sf_dir):
-    tr = _transcripts(spark, sf_dir).selectExpr("length(text) as v")
-    h = drift.histogram(tr, "v", TEXTLEN_EDGES)
-    return h.select(F.col("bin").cast("long").alias("bin"), F.col("cnt"))
+    counts = drift.histogram_counts(
+        _transcripts(spark, sf_dir), {"v": "length(text)"},
+        edges={"v": TEXTLEN_EDGES},
+    )["v"]
+    return spark.createDataFrame(
+        [(i, c) for i, c in enumerate(counts) if c], "bin long, cnt long"
+    )
 
 
-def q_drift_psi(spark, sf_dir):
-    """PSI/KL of text-length: even- vs odd-numbered conversations (a
-    parity split — scale-independent, unlike the old hardcoded id
-    literal), binned on FIXED edges so the whole pipeline (histogram →
-    epsilon-smoothed PSI/KL in the pandas UDF) is deterministic and the
-    DuckDB oracle can replay the arithmetic exactly."""
+def q_drift_scores_textlen(spark, sf_dir):
+    """PSI/KL + KS of text-length in ONE 1-row gate: even- vs odd-numbered
+    conversations (a parity split — scale-independent), binned on FIXED
+    edges so the whole pipeline (histograms → epsilon-smoothed PSI/KL in
+    the pandas UDF; KS as a numpy cumsum over the two histograms) is
+    deterministic and the DuckDB oracle replays the arithmetic exactly."""
     tr = _transcripts(spark, sf_dir)
     parity = F.pmod(F.substring("conv_id", 6, 18).cast("long"), F.lit(2))
     cur = tr.filter(parity == 1).selectExpr("length(text) as v")
     base = tr.filter(parity == 0).selectExpr("length(text) as v")
     s = drift.psi_kl(cur, base, "v", edges=TEXTLEN_EDGES)
-    return spark.createDataFrame(
-        [(s.column, round(float(s.psi), 6), round(float(s.kl), 6),
-          int(s.bins))],
-        "column string, psi double, kl double, bins int",
-    )
-
-
-def q_drift_ks(spark, sf_dir):
-    """Kolmogorov–Smirnov drift of text-length over the same parity
-    split and fixed edges as the PSI gate — the supremum-distance view
-    of the drift family. Pure window cumsum over the joined histograms;
-    the oracle replays the CDF arithmetic digit-for-digit."""
-    tr = _transcripts(spark, sf_dir)
-    parity = F.pmod(F.substring("conv_id", 6, 18).cast("long"), F.lit(2))
-    cur = tr.filter(parity == 1).selectExpr("length(text) as v")
-    base = tr.filter(parity == 0).selectExpr("length(text) as v")
     ks = drift.ks_drift(cur, base, "v", edges=TEXTLEN_EDGES)
     return spark.createDataFrame(
-        [("v", round(ks, 6))], "column string, ks double"
+        [(s.column, round(float(s.psi), 6), round(float(s.kl), 6),
+          int(s.bins), round(ks, 6))],
+        "column string, psi double, kl double, bins int, ks double",
     )
 
 
@@ -1038,30 +1028,9 @@ def q_stream_drift_monitor(spark, sf_dir):
         .distinct()
         .collect()
     )
-    num_cols, num_aggs = drift_op.multi_histogram_exprs(
-        {"textlen": TEXTLEN_EDGES}, exprs
+    snapshot = drift_op.bucket_snapshot(
+        a, exprs, edges={"textlen": TEXTLEN_EDGES}, cats={"role": cats}
     )
-    cat_cols, cat_aggs = drift_op.categorical_histogram_exprs(
-        {"role": cats}, exprs
-    )
-    row = (
-        a.select(*num_cols, *cat_cols).agg(*num_aggs, *cat_aggs)
-        .collect()[0].asDict()
-    )
-    snapshot = {
-        "textlen": {
-            "edges": list(TEXTLEN_EDGES),
-            "counts": drift_op.decode_histogram_row(
-                row, "textlen", len(TEXTLEN_EDGES) + 1
-            ),
-        },
-        "role": {
-            "cats": cats,
-            "counts": drift_op.decode_histogram_row(
-                row, "role", len(cats) + 1
-            ),
-        },
-    }
     results = []
     handler = drift_monitor(
         snapshot, exprs, lambda bid, scores: results.append(scores)
@@ -1175,12 +1144,6 @@ def q_stats_summary(spark, sf_dir):
     """Mean/stddev + exact percentiles in ONE 1-row gate (1×1 cross join
     of the two already-certified aggregates)."""
     return q_stats(spark, sf_dir).crossJoin(q_stats_percentiles(spark, sf_dir))
-
-
-def q_drift_scores_textlen(spark, sf_dir):
-    """PSI/KL + KS of the text-length parity split in ONE 1-row gate."""
-    ks = q_drift_ks(spark, sf_dir).select("ks")
-    return q_drift_psi(spark, sf_dir).crossJoin(ks)
 
 
 def q_dedup_exact_merged(spark, sf_dir):

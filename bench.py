@@ -239,12 +239,10 @@ def main():
 
     # drift baseline snapshot: established once per baseline, not per run
     from data_contract_engine_spark import parse_contract_yaml
-    from data_contract_engine_spark.operators.drift import baseline_snapshot
+    from data_contract_engine_spark.operators import drift as drift_op
 
     contract = parse_contract_yaml(FLAGSHIP_CONTRACT_YAML, name="flagship")
-    snap = baseline_snapshot(
-        tr, {c: s.get("expr") or c for c, s in contract.quality.drift.items()}
-    )
+    snap = drift_op.contract_baseline_snapshot(tr, contract.quality.drift)
 
     # warmup (not timed): JIT + codegen + python workers + parquet footers
     # — same methodology as scripts/bench_scaling.py; the suite number is

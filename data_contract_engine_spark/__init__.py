@@ -4,7 +4,7 @@ A from-scratch Spark rebuild of the capabilities of
 pogoPotato/data-contract-engine (see /root/repo/SURVEY.md): declarative
 YAML contracts compile to vectorized Column expressions evaluated in one
 fused pass; dataset quality rules run as single-pass aggregations, salted
-hash-aggregates, broadcast anti-joins and histogram-join drift scoring.
+hash-aggregates, broadcast anti-joins and snapshot-histogram drift scoring.
 """
 
 from .contracts.model import Contract, FieldDef, QualityRules

@@ -30,6 +30,7 @@ from .checkpoint import CheckpointStore, validate_resumable
 from .fixtures.transcripts import FLAGSHIP_CONTRACT_YAML
 from .fixtures.transcripts_sql import spark_transcripts_from_events
 from .metrics import rollup as rollup_mod
+from .operators.drift import contract_baseline_snapshot
 from .sources import readers, sinks
 
 
@@ -65,10 +66,11 @@ def cmd_validate(args) -> int:
     t0 = time.time()
     df = _load_input(spark, args)
     contract = _load_contract(args)
-    baseline = (
-        spark.read.parquet(args.drift_baseline) if args.drift_baseline else None
-    )
-    engine = ContractEngine(spark, drift_baseline=baseline)
+    snapshot = None
+    if args.drift_baseline and contract.quality.drift:  # once per run
+        snapshot = contract_baseline_snapshot(
+            spark.read.parquet(args.drift_baseline), contract.quality.drift)
+    engine = ContractEngine(spark, drift_baseline_snapshot=snapshot)
     keys = args.key_columns.split(",") if args.key_columns else None
 
     if args.checkpoint:
@@ -453,7 +455,8 @@ def build_parser() -> argparse.ArgumentParser:
     v.add_argument("--violations-out", default=None)
     v.add_argument("--summary-out", default=None)
     v.add_argument("--drift-baseline", default=None,
-                   help="parquet path of the baseline snapshot")
+                   help="parquet path of the drift baseline data, "
+                   "snapshotted once per run")
     v.set_defaults(fn=cmd_validate)
 
     r = sub.add_parser("rollup", help="daily metrics rollup")

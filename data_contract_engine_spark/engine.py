@@ -191,49 +191,7 @@ class ValidationRun:
             )
         )
 
-    def _drift_prep(self):
-        """(drift_exprs, drift_edges, drift_cats, base_bins): a precomputed
-        snapshot costs ZERO jobs; a baseline DataFrame costs two (edges +
-        histogram) — production snapshots once at baseline creation
-        (drift_op.baseline_snapshot). Columns whose drift spec declares
-        ``type: categorical`` use the baseline's category set as the bucket
-        space (+ an ``__other__`` bucket) instead of numeric bin edges."""
-        rules = self.contract.quality
-        drift_exprs: Dict[str, str] = {}
-        drift_edges: Dict[str, list] = {}
-        drift_cats: Dict[str, list] = {}
-        base_bins: Dict[str, list] = {}
-        if rules.drift:
-            drift_exprs = {
-                col: spec.get("expr") or col
-                for col, spec in rules.drift.items()
-            }
-            cat_cols = [
-                c for c, spec in rules.drift.items()
-                if spec.get("type") == "categorical"
-            ]
-            snapshot = self.engine.drift_baseline_snapshot
-            if snapshot is None and self.engine.drift_baseline is not None:
-                bins = max(
-                    spec.get("bins", 10) for spec in rules.drift.values()
-                )
-                snapshot = drift_op.baseline_snapshot(
-                    self.engine.drift_baseline, drift_exprs, bins,
-                    categorical=cat_cols,
-                )
-            if snapshot:
-                drift_edges = {
-                    c: s["edges"] for c, s in snapshot.items() if s.get("edges")
-                }
-                drift_cats = {
-                    c: s["cats"] for c, s in snapshot.items() if s.get("cats")
-                }
-                base_bins = {c: s["counts"] for c, s in snapshot.items()}
-        return drift_exprs, drift_edges, drift_cats, base_bins
-
-    def _agg_exprs(
-        self, drift_exprs, drift_edges, drift_cats
-    ) -> Tuple[List, List]:
+    def _agg_exprs(self, drift_snapshot) -> Tuple[List, List]:
         """``(row_cols, aggs)`` of the fused pass. ``row_cols`` are the
         per-row values the aggregates need (rule hit flags, referential
         misses, drift bin ids), each computed once in the projection under
@@ -262,14 +220,10 @@ class ValidationRun:
             parts.append(ref_op.fused_vocab_miss_agg(
                 self.df, rules.referential, self.engine.vocab_tables
             ))
-        if drift_edges:
-            parts.append(
-                drift_op.multi_histogram_exprs(drift_edges, drift_exprs)
-            )
-        if drift_cats:
-            parts.append(
-                drift_op.categorical_histogram_exprs(drift_cats, drift_exprs)
-            )
+        if rules.drift and drift_snapshot:
+            parts.append(drift_op.snapshot_histogram_exprs(
+                drift_snapshot, drift_op.drift_exprs(rules.drift)
+            ))
         row_cols: List = []
         for cols, counts in parts:
             row_cols += cols
@@ -288,15 +242,15 @@ class ValidationRun:
         if self._report is not None:
             return self._report
         t0 = time.time()
-        drift_exprs, drift_edges, drift_cats, base_bins = self._drift_prep()
-        row_cols, aggs = self._agg_exprs(drift_exprs, drift_edges, drift_cats)
+        snapshot = self.engine.drift_baseline_snapshot
+        row_cols, aggs = self._agg_exprs(snapshot)
         # run over the validated frame (it carries the source columns)
         agg_row = (
             self.validated.select("*", *row_cols).agg(*aggs)
             .collect()[0].asDict()
         )
         self._report = self._finish_report(
-            agg_row, drift_edges, drift_cats, base_bins, t0, sample_errors
+            agg_row, snapshot, t0, sample_errors
         )
         return self._report
 
@@ -320,8 +274,8 @@ class ValidationRun:
         from pyspark.sql import Observation
 
         t0 = time.time()
-        drift_exprs, drift_edges, drift_cats, base_bins = self._drift_prep()
-        row_cols, aggs = self._agg_exprs(drift_exprs, drift_edges, drift_cats)
+        snapshot = self.engine.drift_baseline_snapshot
+        row_cols, aggs = self._agg_exprs(snapshot)
         obs = Observation(f"contract:{self.contract.name}")
         observed = self.validated.select("*", *row_cols).observe(obs, *aggs)
         run_like = replace(self, validated=observed, _report=None)
@@ -334,12 +288,12 @@ class ValidationRun:
         )
         agg_row = dict(obs.get)
         self._report = self._finish_report(
-            agg_row, drift_edges, drift_cats, base_bins, t0, sample_errors
+            agg_row, snapshot, t0, sample_errors
         )
         return self._report
 
     def _finish_report(
-        self, agg_row, drift_edges, drift_cats, base_bins, t0, sample_errors
+        self, agg_row, drift_snapshot, t0, sample_errors
     ) -> BatchReport:
         rules = self.contract.quality
         ec = self.compiled.options.errors_column
@@ -393,9 +347,7 @@ class ValidationRun:
         if rules.any() and passed > 0:
             qerrors = decode_quality_row(agg_row, rules, now_epoch=self._now())
             qerrors += self._uniqueness_errors()
-            qerrors += self._drift_errors_fused(
-                agg_row, drift_edges, drift_cats, base_bins
-            )
+            qerrors += self._drift_errors_fused(agg_row, drift_snapshot)
             # reference rule order (quality_validator.py:63-75): freshness →
             # completeness → uniqueness → statistics; extensions follow
             order = {
@@ -483,31 +435,17 @@ class ValidationRun:
         return out
 
     def _drift_errors_fused(
-        self,
-        agg_row: Dict[str, Any],
-        drift_edges: Dict[str, list],
-        drift_cats: Dict[str, list],
-        base_bins: Dict[str, list],
+        self, agg_row: Dict[str, Any], drift_snapshot
     ) -> List[QualityError]:
         """Score drift from the fused current-histogram counts in
-        ``agg_row`` vs the baseline histogram: all columns in ONE
-        mapInPandas job over the tiny histogram relation.
-        Numeric columns bucket by quantile edges; categorical ones by the
-        baseline's category set (+ __other__) — same decode/score path."""
+        ``agg_row`` vs the baseline snapshot: all columns in ONE
+        mapInPandas job over the tiny histogram relation."""
         rules = self.contract.quality
-        if not rules.drift or not (drift_edges or drift_cats):
+        if not (rules.drift and drift_snapshot):
             return []
-        per_col = {}
-        for column in rules.drift:
-            if column in drift_edges:
-                n_bins = len(drift_edges[column]) + 1
-            elif column in drift_cats:
-                n_bins = len(drift_cats[column]) + 1
-            else:
-                continue
-            cur = drift_op.decode_histogram_row(agg_row, column, n_bins)
-            per_col[column] = (cur, base_bins[column])
-        scores = drift_op.score_histograms_pandas(self.engine.spark, per_col)
+        scores = drift_op.score_snapshot_row(
+            self.engine.spark, drift_snapshot, agg_row
+        )
         out: List[QualityError] = []
         for column, spec in rules.drift.items():
             score = scores.get(column)
@@ -525,11 +463,8 @@ class ValidationRun:
                             f"exceeds threshold {threshold}"
                         ),
                         severity=spec.get("severity", "WARNING"),
-                        details={
-                            "field": column,
-                            "psi": score.psi,
-                            "kl": score.kl,
-                        },
+                        details={"field": column, "psi": score.psi,
+                                 "kl": score.kl},
                     )
                 )
         return out
@@ -540,7 +475,8 @@ class ContractEngine:
 
     Options:
       * ``vocab_tables``: name → DataFrame registry for referential rules;
-      * ``drift_baseline``: baseline DataFrame for drift rules;
+      * ``drift_baseline_snapshot``: the drift rules' baseline, from
+        ``drift.contract_baseline_snapshot`` (or ``baseline_snapshot``);
       * ``now_epoch``: freeze "now" for deterministic freshness tests;
       * ``compile_options``: error cap / null policy.
     """
@@ -549,16 +485,12 @@ class ContractEngine:
         self,
         spark: SparkSession,
         vocab_tables: Optional[Dict[str, DataFrame]] = None,
-        drift_baseline: Optional[DataFrame] = None,
         drift_baseline_snapshot: Optional[Dict[str, Dict[str, list]]] = None,
         now_epoch: Optional[float] = None,
         compile_options: Optional[CompileOptions] = None,
     ):
         self.spark = spark
         self.vocab_tables = vocab_tables or {}
-        self.drift_baseline = drift_baseline
-        # {col: {"edges": [...], "counts": [...]}} from
-        # drift_op.baseline_snapshot — the zero-job production path
         self.drift_baseline_snapshot = drift_baseline_snapshot
         self.now_epoch = now_epoch
         self.compile_options = compile_options or CompileOptions()

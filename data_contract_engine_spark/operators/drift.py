@@ -1,22 +1,30 @@
-"""Distribution-drift checks: PSI / KL divergence vs a baseline snapshot.
+"""Distribution-drift checks: PSI / KL divergence and KS vs a baseline snapshot.
 
 Upgrade path of the reference's `statistics` rules (SURVEY.md §2.3 A16,
 `app/core/quality_validator.py:184-235`): instead of mean/std bounds, bin
 the column into a histogram and compare against a persisted baseline
 histogram.
 
-Scale design:
-  * bin edges come from ``approx_percentile`` over the baseline — one
-    aggregate pass, sketch-based (no sort, no collect of data);
-  * binning the 10^12-row current table is a CASE-chain bin id projected
-    once per row, counted per bin inside the engine's fused aggregate
-    (:func:`multi_histogram_exprs`); the standalone path is the same
-    projection + one groupBy(bin).count() — partial aggregation makes the
-    shuffle tiny (≤ bins rows per partition);
-  * the two histograms are bins-sized (tiny); the engine scores every
-    column in one single-partition mapInPandas job
-    (:func:`score_histograms_pandas`) — the only Python in the pipeline,
-    over ~10s of rows.
+Every score takes one path:
+
+  1. :func:`baseline_snapshot` fixes each column's bucket space — numeric
+     bin edges from ``approx_percentile`` over the baseline (one sketch
+     aggregate, no sort), categorical top-k categories plus an
+     ``__other__`` bucket — and counts the baseline into it:
+     ``{name: {"edges"|"cats": [...], "counts": [...]}}``. Only this
+     module reads that format; persist it and every later run needs zero
+     baseline scans.
+  2. :func:`histogram_counts` counts a frame into the same buckets: a
+     CASE-chain bucket id projected once per row and one ``count_if`` per
+     bucket, all columns in ONE aggregate. The engine adds the same
+     expressions (:func:`snapshot_histogram_exprs`) to its fused pass.
+  3. :func:`score_histograms_pandas` scores every column in one
+     single-partition mapInPandas job over the bins-sized histogram
+     relation — the only Python in the pipeline, over ~10s of rows.
+
+:func:`psi_kl`, :func:`psi_kl_categorical` and :func:`ks_drift` are thin
+wrappers over that path; they keep only the buckets seen on either side.
+KS is the supremum distance of the two cumulative count lists (numpy).
 
 PSI = Σ (p_i − q_i) · ln(p_i / q_i);  KL(p‖q) = Σ p_i · ln(p_i / q_i),
 with epsilon-smoothed proportions so empty bins stay finite.
@@ -27,13 +35,14 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-from typing import List, Optional, Sequence, Tuple
+from typing import Dict, List, Mapping, Optional, Sequence, Tuple, Union
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
 EPS = 1e-6
+OTHER_BUCKET = "__other__"
 
 
 @dataclass
@@ -42,34 +51,6 @@ class DriftScore:
     psi: float
     kl: float
     bins: int
-
-
-def quantile_edges(
-    df: DataFrame, column: str, bins: int = 10, accuracy: int = 10000
-) -> List[float]:
-    """Bin edges from approx_percentile over the baseline distribution."""
-    probs = [i / bins for i in range(1, bins)]
-    row = df.agg(
-        F.percentile_approx(F.col(column).cast("double"), probs, accuracy).alias("q")
-    ).collect()[0]
-    edges = sorted(set(row["q"] or []))
-    return [e for e in edges if e is not None]
-
-
-def histogram(df: DataFrame, column: str, edges: Sequence[float]) -> DataFrame:
-    """(bin, count) with bin ∈ [0, len(edges)]; nulls are dropped.
-
-    ``width_bucket(v, lo, hi, n)`` needs equi-width bins, so we bin against
-    the explicit quantile edge list with a fused CASE chain — still one
-    codegen'd projection.
-    """
-    expr, v = bin_expr(F.col(column), edges)
-    return (
-        df.filter(v.isNotNull())
-        .select(expr.alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
 
 
 def _psi_kl_numpy(pdf: pd.DataFrame) -> tuple:
@@ -85,69 +66,48 @@ def _psi_kl_numpy(pdf: pd.DataFrame) -> tuple:
     return float(((p - q) * lr).sum()), float((p * lr).sum())
 
 
-def psi_kl_from_histograms(
-    current: DataFrame, baseline: DataFrame, column: str = "value"
-) -> DriftScore:
-    """Join the two tiny histograms and score drift in one pandas UDF."""
-    cur = current.select(F.col("bin"), F.col("cnt").alias("cur_cnt"))
-    base = baseline.select(F.col("bin"), F.col("cnt").alias("base_cnt"))
-    joined = cur.join(base, "bin", "full_outer").fillna(
-        {"cur_cnt": 0, "base_cnt": 0}
-    )
+def _ks(cur: Sequence[int], base: Sequence[int]) -> float:
+    """Two-sample Kolmogorov–Smirnov statistic of two histograms over the
+    same buckets: max |CDF_cur − CDF_base|. No smoothing, so an external
+    SQL oracle replays the arithmetic digit-for-digit."""
+    import numpy as np
 
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one Arrow batch over the bins-sized frame; vectorized numpy math
-        psi, kl = _psi_kl_numpy(pdf)
-        return pd.DataFrame({"psi": [psi], "kl": [kl], "bins": [len(pdf)]})
-
-    rows = (
-        joined.groupBy(F.lit(1).alias("__g"))
-        .applyInPandas(lambda _, pdf: score(pdf), "psi double, kl double, bins long")
-        .collect()
-    )
-    if not rows:
-        return DriftScore(column=column, psi=0.0, kl=0.0, bins=0)
-    r = rows[0]
-    return DriftScore(column=column, psi=r["psi"], kl=r["kl"], bins=r["bins"])
-
-
-def ks_from_histograms(current: DataFrame, baseline: DataFrame) -> float:
-    """Two-sample Kolmogorov–Smirnov statistic from binned histograms:
-    max |CDF_cur − CDF_base| over the shared bins. Pure Column math on
-    the bins-sized joined frame (the single-partition window is fine at
-    histogram scale); no smoothing, so an external SQL oracle replays the
-    arithmetic digit-for-digit. Complements PSI/KL: KS is the
-    supremum-distance view (sensitive to a single shifted mode), PSI/KL
-    the mass-ratio view."""
-    from pyspark.sql import Window
-
-    cur = current.select("bin", F.col("cnt").alias("c"))
-    base = baseline.select("bin", F.col("cnt").alias("b"))
-    j = cur.join(base, "bin", "full_outer").fillna({"c": 0, "b": 0})
-    wall = Window.partitionBy()
-    worder = Window.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = j.select(
-        "c", "b",
-        (F.sum("c").over(worder) / F.sum("c").over(wall)).alias("fc"),
-        (F.sum("b").over(worder) / F.sum("b").over(wall)).alias("fb"),
-    )
-    row = cum.agg(
-        F.max(F.abs(F.col("fc") - F.col("fb"))).alias("ks"),
-        F.sum("c").alias("tc"),
-        F.sum("b").alias("tb"),
-    ).collect()[0]
-    # an empty side has no CDF: the division yields NULL, and silently
-    # coercing that to 0.0 would read "no drift" for a side with no data
-    # (round-3 advice). Fail loudly instead.
-    if not row["tc"] or not row["tb"]:
+    c = np.asarray(cur, dtype="int64")
+    b = np.asarray(base, dtype="int64")
+    tc, tb = int(c.sum()), int(b.sum())
+    # an empty side has no CDF, and reading it as 0.0 would say "no
+    # drift" for a side with no data: fail loudly instead
+    if not tc or not tb:
         raise ValueError(
-            "ks_from_histograms: KS is undefined when a histogram side "
-            f"has zero total count (current={row['tc'] or 0}, "
-            f"baseline={row['tb'] or 0})"
+            "ks_drift: KS is undefined when a histogram side has zero "
+            f"total count (current={tc}, baseline={tb})"
         )
-    return float(row["ks"])
+    return float(np.abs(np.cumsum(c) / tc - np.cumsum(b) / tb).max())
+
+
+def _seen_buckets(current_df: DataFrame, snapshot: dict, column: str):
+    """(current, baseline) counts of ``column`` over the snapshot's buckets
+    that are non-empty on either side."""
+    cur = histogram_counts(current_df, {column: column}, **_spaces(snapshot))
+    pairs = [p for p in zip(cur[column], snapshot[column]["counts"]) if any(p)]
+    return [c for c, _ in pairs], [b for _, b in pairs]
+
+
+def _psi_kl_seen(current_df: DataFrame, snapshot: dict, column: str):
+    if column not in snapshot:
+        return DriftScore(column, 0.0, 0.0, 0)
+    cur, base = _seen_buckets(current_df, snapshot, column)
+    scores = score_histograms_pandas(
+        current_df.sparkSession, {column: (cur, base)}
+    )
+    # no bucket seen on either side: nothing to score
+    return scores.get(column, DriftScore(column, 0.0, 0.0, 0))
+
+
+def _numeric_snapshot(baseline_df, column, bins, edges) -> dict:
+    if edges is None:
+        return baseline_snapshot(baseline_df, {column: column}, bins)
+    return bucket_snapshot(baseline_df, {column: column}, edges={column: edges})
 
 
 def ks_drift(
@@ -157,17 +117,15 @@ def ks_drift(
     bins: int = 10,
     edges: Optional[Sequence[float]] = None,
 ) -> float:
-    """End-to-end KS drift for one column: edges from the baseline,
-    both sides binned, KS from the joined histograms."""
-    edges = list(edges) if edges is not None else quantile_edges(
-        baseline_df, column, bins
-    )
-    if not edges:
+    """KS drift for one column: the baseline's snapshot (quantile edges,
+    or ``edges``), the current side counted into it, KS over the buckets
+    seen on either side. Complements PSI/KL: KS is the supremum-distance
+    view (sensitive to a single shifted mode), PSI/KL the mass-ratio view.
+    Raises ``ValueError`` when a side has no non-null value."""
+    snapshot = _numeric_snapshot(baseline_df, column, bins, edges)
+    if column not in snapshot:
         return 0.0
-    return ks_from_histograms(
-        histogram(current_df, column, edges),
-        histogram(baseline_df, column, edges),
-    )
+    return _ks(*_seen_buckets(current_df, snapshot, column))
 
 
 def psi_kl(
@@ -177,80 +135,12 @@ def psi_kl(
     bins: int = 10,
     edges: Optional[Sequence[float]] = None,
 ) -> DriftScore:
-    """End-to-end drift score for one column: edges from the baseline,
-    both sides binned, PSI+KL from the joined histograms."""
-    edges = list(edges) if edges is not None else quantile_edges(
-        baseline_df, column, bins
+    """PSI/KL drift for one column: the baseline's snapshot (quantile
+    edges, or ``edges``), the current side counted into it, scored over
+    the buckets seen on either side."""
+    return _psi_kl_seen(
+        current_df, _numeric_snapshot(baseline_df, column, bins, edges), column
     )
-    if not edges:
-        return DriftScore(column=column, psi=0.0, kl=0.0, bins=0)
-    cur_h = histogram(current_df, column, edges)
-    base_h = histogram(baseline_df, column, edges)
-    out = psi_kl_from_histograms(cur_h, base_h, column)
-    return DriftScore(column=column, psi=out.psi, kl=out.kl, bins=out.bins)
-
-
-OTHER_BUCKET = "__other__"
-
-
-def categorical_histogram(
-    df: DataFrame, column: str, top_k: int = 100, _with_flag: bool = False
-) -> DataFrame:
-    """(cat, cnt) over the column's values with a deterministic top-k cap:
-    the ``top_k`` most frequent categories (ties broken by value) keep
-    their own bucket, everything else rolls into ``__other__`` — bounding
-    the histogram relation regardless of column cardinality. One
-    hash-aggregate + a driver-side top-k list (≤ top_k values).
-
-    The rollup bucket name is reserved: a REAL category whose string value
-    is literally ``__other__`` would be indistinguishable from the rollup
-    (and would skew the fused engine path's baseline category space), so
-    it raises here the moment it shows up in the top-k; callers that
-    collect the histogram (``baseline_snapshot`` / ``psi_kl_categorical``)
-    use ``_with_flag`` to catch it even outside the top-k with zero extra
-    scans (the flag rides the existing rollup aggregate).
-    """
-    counts = (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(F.col(column).cast("string").alias("cat"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    top = [
-        r["cat"]
-        for r in counts.orderBy(F.desc("cnt"), "cat").limit(top_k).collect()
-    ]
-    if OTHER_BUCKET in top:
-        raise ValueError(
-            f"column {column!r} contains {OTHER_BUCKET!r} as a real value; "
-            "it collides with the rollup bucket — rename or pre-map it"
-        )
-    rolled = (
-        counts.select(
-            F.when(F.col("cat").isin(top), F.col("cat"))
-            .otherwise(F.lit(OTHER_BUCKET))
-            .alias("cat"),
-            "cnt",
-            (F.col("cat") == OTHER_BUCKET).cast("int").alias("__lit_other"),
-        )
-        .groupBy("cat")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.max("__lit_other").alias("__lit_other"),
-        )
-    )
-    if _with_flag:
-        return rolled
-    return rolled.select("cat", "cnt")
-
-
-def _guard_literal_other(rows, column: str):
-    """Raise if any collected flagged-histogram row saw a literal
-    ``__other__`` value rolled into a bucket."""
-    if any(r["__lit_other"] for r in rows):
-        raise ValueError(
-            f"column {column!r} contains {OTHER_BUCKET!r} as a real value; "
-            "it collides with the rollup bucket — rename or pre-map it"
-        )
 
 
 def psi_kl_categorical(
@@ -262,45 +152,46 @@ def psi_kl_categorical(
     """PSI/KL over a CATEGORICAL column's frequency distribution — the
     drift check for enum-ish fields (role, tool, language, source) where
     numeric binning is meaningless. The category set is fixed by the
-    BASELINE's top-k (current values outside it roll into ``__other__``,
-    so a brand-new category registers as drift instead of silently
-    changing the bucket space); the epsilon-smoothed scorer is shared
-    with the numeric path. Job count: one baseline aggregate (collected —
-    it is ≤ top_k+1 rows), one current aggregate, and the PSI/KL
-    arithmetic runs driver-side over those tiny dicts (no join job, no
-    UDF job — the histograms already fit in the driver by construction)."""
-    base_rows = categorical_histogram(
-        baseline_df, column, top_k, _with_flag=True
-    ).collect()
-    _guard_literal_other(base_rows, column)
-    base_counts = {r["cat"]: r["cnt"] for r in base_rows}
-    base_cats = [c for c in base_counts if c != OTHER_BUCKET]
-    cur_rows = (
-        current_df.filter(F.col(column).isNotNull())
-        .groupBy(
-            F.when(
-                F.col(column).cast("string").isin(base_cats),
-                F.col(column).cast("string"),
-            )
-            .otherwise(F.lit(OTHER_BUCKET))
-            .alias("cat")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.max(
-                (F.col(column).cast("string") == OTHER_BUCKET).cast("int")
-            ).alias("__lit_other"),
-        )
+    BASELINE's top-k; current values outside it — a literal ``__other__``
+    included — count in the ``__other__`` bucket, so a brand-new category
+    registers as drift instead of silently changing the bucket space."""
+    snapshot = baseline_snapshot(
+        baseline_df, {column: column}, top_k, categorical=[column]
+    )
+    return _psi_kl_seen(current_df, snapshot, column)
+
+
+def categorical_histogram(df: DataFrame, column: str, top_k: int = 100) -> dict:
+    """The column's categorical histogram: ``{"cats": [...], "counts":
+    [...]}`` with the ``top_k`` most frequent categories (ties broken by
+    value), sorted, and their counts, the last count being the
+    ``__other__`` rollup. Raises on a literal ``__other__`` value."""
+    return baseline_snapshot(
+        df, {column: column}, top_k, categorical=[column]
+    ).get(column, {"cats": [], "counts": []})
+
+
+def _top_categories(df: DataFrame, expr: str, column: str, top_k: int) -> list:
+    """The ``top_k`` most frequent non-null values of ``expr`` (ties broken
+    by value), sorted, in one job. The rollup bucket name is reserved: a
+    real value ``__other__`` anywhere in the baseline would be
+    indistinguishable from the rollup, so it sorts first and raises."""
+    cat = F.col("cat")
+    rows = (
+        df.select(F.expr(expr).cast("string").alias("cat"))
+        .where(cat.isNotNull())
+        .groupBy(cat)
+        .count()
+        .orderBy((cat == OTHER_BUCKET).desc(), F.desc("count"), cat)
+        .limit(top_k + 1)
         .collect()
     )
-    _guard_literal_other(cur_rows, column)
-    cur_counts = {r["cat"]: r["cnt"] for r in cur_rows}
-    buckets = sorted(set(base_counts) | set(cur_counts))
-    psi, kl = psi_kl_exact(
-        [cur_counts.get(b, 0) for b in buckets],
-        [base_counts.get(b, 0) for b in buckets],
-    )
-    return DriftScore(column=column, psi=psi, kl=kl, bins=len(buckets))
+    if rows and rows[0]["cat"] == OTHER_BUCKET:
+        raise ValueError(
+            f"column {column!r} contains {OTHER_BUCKET!r} as a real value; "
+            "it collides with the rollup bucket — rename or pre-map it"
+        )
+    return sorted(r["cat"] for r in rows[:top_k])
 
 
 def _first_match(conds: Sequence, default: int):
@@ -319,33 +210,31 @@ def bin_expr(value, edges: Sequence[float]):
 
 
 def multi_quantile_edges(
-    df: DataFrame, exprs: dict, bins: int = 10, accuracy: int = 10000
+    df: DataFrame,
+    exprs: dict,
+    bins: Union[int, Mapping[str, int]] = 10,
+    accuracy: int = 10000,
 ) -> dict:
     """Bin edges for MANY columns in ONE aggregate pass over the baseline.
 
-    ``exprs``: {name: sql_expr_string}. Returns {name: [edges...]}.
+    ``exprs``: {name: sql_expr_string}; ``bins``: one count for every
+    column, or {name: bins}. Returns {name: [edges...]}.
     """
-    probs = {}
-    aggs = []
-    for name, e in exprs.items():
-        p = [i / bins for i in range(1, bins)]
-        probs[name] = p
-        aggs.append(
-            F.percentile_approx(F.expr(e).cast("double"), p, accuracy).alias(
-                f"__q__{name}"
-            )
-        )
-    row = df.agg(*aggs).collect()[0]
-    out = {}
-    for name in exprs:
-        qs = row[f"__q__{name}"] or []
-        out[name] = sorted({q for q in qs if q is not None})
-    return out
+    n = bins if isinstance(bins, Mapping) else dict.fromkeys(exprs, bins)
+    row = df.agg(*[
+        F.percentile_approx(
+            F.expr(e).cast("double"), [i / n[c] for i in range(1, n[c])],
+            accuracy,
+        ).alias(f"__q__{c}")
+        for c, e in exprs.items()
+    ]).collect()[0]
+    return {
+        c: sorted({q for q in row[f"__q__{c}"] or [] if q is not None})
+        for c in exprs
+    }
 
 
-def multi_histogram_exprs(
-    edges_by_name: dict, exprs: dict
-) -> Tuple[List, List]:
+def multi_histogram_exprs(edges_by_name: dict, exprs: dict) -> Tuple[List, List]:
     """``(row_cols, aggs)`` of the fused per-bin counts for many columns,
     meant to ride along in the engine's single global agg pass: one row
     column ``__bin__{name}`` per column (its CASE-chain bin id, NULL for a
@@ -361,9 +250,7 @@ def multi_histogram_exprs(
     return row_cols, aggs
 
 
-def categorical_histogram_exprs(
-    cats_by_name: dict, exprs: dict
-) -> Tuple[List, List]:
+def categorical_histogram_exprs(cats_by_name: dict, exprs: dict) -> Tuple[List, List]:
     """Categorical twin of :func:`multi_histogram_exprs`: the bucket id is
     the baseline category's index, or len(cats) (the ``__other__`` bucket)
     for a value outside the baseline's category space — same row column
@@ -380,19 +267,147 @@ def categorical_histogram_exprs(
 
 def _bin_counts(name: str, n_bins: int) -> List:
     b = F.col(f"__bin__{name}")
-    return [
-        F.count_if(b == i).alias(f"__driftbin__{name}__{i}")
-        for i in range(n_bins)
-    ]
+    return [F.count_if(b == i).alias(f"__driftbin__{name}__{i}")
+            for i in range(n_bins)]
 
 
 def decode_histogram_row(row: dict, name: str, n_bins: int) -> List[int]:
     return [int(row.get(f"__driftbin__{name}__{i}") or 0) for i in range(n_bins)]
 
 
-def score_histograms_pandas(
-    spark, per_column: dict
+def _spaces(snapshot: dict) -> dict:
+    """A snapshot's bucket spaces, as :func:`histogram_counts` keywords."""
+    return {k: {c: s[k] for c, s in snapshot.items() if s.get(k)}
+            for k in ("edges", "cats")}
+
+
+def _histogram_exprs(exprs, edges, cats) -> Tuple[List, List]:
+    num = multi_histogram_exprs(edges, exprs)
+    cat = categorical_histogram_exprs(cats, exprs)
+    return num[0] + cat[0], num[1] + cat[1]
+
+
+def _decode_counts(row: dict, edges: dict, cats: dict) -> Dict[str, List[int]]:
+    # a column's bucket count is len(edges) + 1 or len(cats) + 1
+    return {c: decode_histogram_row(row, c, len(b) + 1)
+            for c, b in {**edges, **cats}.items()}
+
+
+def histogram_counts(
+    df: DataFrame,
+    exprs: dict,
+    edges: Optional[dict] = None,
+    cats: Optional[dict] = None,
+) -> Dict[str, List[int]]:
+    """Count ``df`` into fixed buckets, every column in ONE aggregate:
+    numeric columns binned on ``edges`` ({name: [edges...]}, ``len + 1``
+    bins), categorical ones on ``cats`` ({name: [cats...]}, ``len + 1``
+    buckets, the last ``__other__``); NULLs are not counted.
+    ``exprs``: {name: sql_expr}. Returns {name: [counts...]}."""
+    edges, cats = edges or {}, cats or {}
+    row_cols, aggs = _histogram_exprs(exprs, edges, cats)
+    if not aggs:
+        return {}
+    row = df.select(*row_cols).agg(*aggs).collect()[0].asDict()
+    return _decode_counts(row, edges, cats)
+
+
+def bucket_snapshot(
+    df: DataFrame,
+    exprs: dict,
+    edges: Optional[dict] = None,
+    cats: Optional[dict] = None,
 ) -> dict:
+    """Snapshot of ``df`` over GIVEN bucket spaces (see
+    :func:`histogram_counts`); a column with no edges or no categories is
+    left out."""
+    spaces = {
+        "edges": {c: list(e) for c, e in (edges or {}).items() if e},
+        "cats": {c: list(v) for c, v in (cats or {}).items() if v},
+    }
+    counts = histogram_counts(df, exprs, **spaces)
+    return {
+        c: {k: b, "counts": counts[c]}
+        for k, space in spaces.items() for c, b in space.items()
+    }
+
+
+def baseline_snapshot(
+    df: DataFrame,
+    exprs: dict,
+    bins: Union[int, Mapping[str, int]] = 10,
+    categorical: Sequence[str] = (),
+) -> dict:
+    """Precompute the drift baseline:
+    numeric columns → {name: {"edges": [...], "counts": [...]}},
+    ``categorical`` columns → {name: {"cats": [...], "counts": [...]}}
+    (top-``bins`` categories by frequency, last count = ``__other__``).
+    ``bins``: one count for every column, or {name: bins}; a column whose
+    baseline has no non-null value is left out.
+
+    Run ONCE when the baseline is established (e.g. when a contract
+    version is activated) and persist the (tiny) result — per-run
+    validation then needs zero baseline scans. ``exprs``: {name: sql_expr}.
+    """
+    per_col = bins if isinstance(bins, Mapping) else dict.fromkeys(exprs, bins)
+    numeric = {c: e for c, e in exprs.items() if c not in set(categorical)}
+    edges = multi_quantile_edges(df, numeric, per_col) if numeric else {}
+    cats = {
+        c: _top_categories(df, exprs[c], c, per_col[c]) for c in categorical
+    }
+    return bucket_snapshot(df, exprs, edges, cats)
+
+
+def drift_exprs(drift_rules: Mapping[str, dict]) -> Dict[str, str]:
+    """{column: sql_expr} of a contract's ``quality_rules.drift`` spec: a
+    column's ``expr``, else the column itself."""
+    return {c: spec.get("expr") or c for c, spec in drift_rules.items()}
+
+
+def contract_baseline_snapshot(
+    df: DataFrame, drift_rules: Mapping[str, dict]
+) -> dict:
+    """:func:`baseline_snapshot` of a contract's ``quality_rules.drift``
+    spec: each column's ``expr``, its own ``bins`` (default 10; the top-k
+    of a ``type: categorical`` column)."""
+    return baseline_snapshot(
+        df,
+        drift_exprs(drift_rules),
+        {c: spec.get("bins", 10) for c, spec in drift_rules.items()},
+        categorical=[
+            c for c, spec in drift_rules.items()
+            if spec.get("type") == "categorical"
+        ],
+    )
+
+
+def snapshot_histogram_exprs(snapshot: dict, exprs: dict) -> Tuple[List, List]:
+    """``(row_cols, aggs)`` counting a frame into the snapshot's buckets,
+    for a caller's own fused aggregate (the engine's report pass); decode
+    the aggregate row with :func:`score_snapshot_row`."""
+    return _histogram_exprs(exprs, **_spaces(snapshot))
+
+
+def _score(spark, snapshot: dict, counts: dict) -> Dict[str, DriftScore]:
+    return score_histograms_pandas(
+        spark, {c: (cur, snapshot[c]["counts"]) for c, cur in counts.items()}
+    )
+
+
+def score_snapshot_row(spark, snapshot: dict, row: dict) -> Dict[str, DriftScore]:
+    """Score every snapshot column from an aggregate row that carries
+    :func:`snapshot_histogram_exprs`' counts, in one Spark job."""
+    return _score(spark, snapshot, _decode_counts(row, **_spaces(snapshot)))
+
+
+def drift_scores(df: DataFrame, snapshot: dict, exprs: dict) -> Dict[str, DriftScore]:
+    """Score ``df``'s drift against the snapshot over every bucket: one
+    aggregate over ``df`` and one scoring job."""
+    counts = histogram_counts(df, exprs, **_spaces(snapshot))
+    return _score(df.sparkSession, snapshot, counts)
+
+
+def score_histograms_pandas(spark, per_column: dict) -> dict:
     """Score MANY columns' drift in ONE Python job.
 
     ``per_column``: {name: (cur_counts, base_counts)} — tiny lists.
@@ -441,64 +456,10 @@ def score_histograms_pandas(
     }
 
 
-def baseline_snapshot(
-    df: DataFrame,
-    exprs: dict,
-    bins: int = 10,
-    categorical: Sequence[str] = (),
-) -> dict:
-    """Precompute the drift baseline:
-    numeric columns → {name: {"edges": [...], "counts": [...]}},
-    ``categorical`` columns → {name: {"cats": [...], "counts": [...]}}
-    (top-``bins`` categories by frequency, last count = ``__other__``).
-
-    Run ONCE when the baseline is established (e.g. when a contract
-    version is activated) and persist the (tiny) result — per-run
-    validation then needs zero baseline scans. ``exprs``: {name: sql_expr}.
-    """
-    numeric = {c: e for c, e in exprs.items() if c not in set(categorical)}
-    edges = {
-        c: e for c, e in multi_quantile_edges(df, numeric, bins).items() if e
-    } if numeric else {}
-    cats = {}
-    for c in categorical:
-        hist = categorical_histogram(
-            df.select(F.expr(exprs[c]).alias(c)), c, top_k=bins,
-            _with_flag=True,
-        ).collect()
-        _guard_literal_other(hist, c)
-        ordered = sorted(
-            (r for r in hist if r["cat"] != OTHER_BUCKET),
-            key=lambda r: r["cat"],
-        )
-        cats[c] = [r["cat"] for r in ordered]
-    if not edges and not cats:
-        return {}
-    num_cols, num_aggs = multi_histogram_exprs(edges, exprs)
-    cat_cols, cat_aggs = categorical_histogram_exprs(cats, exprs)
-    row = (
-        df.select(*num_cols, *cat_cols).agg(*num_aggs, *cat_aggs)
-        .collect()[0].asDict()
-    )
-    out = {
-        c: {
-            "edges": list(edges[c]),
-            "counts": decode_histogram_row(row, c, len(edges[c]) + 1),
-        }
-        for c in edges
-    }
-    for c in cats:
-        out[c] = {
-            "cats": list(cats[c]),
-            "counts": decode_histogram_row(row, c, len(cats[c]) + 1),
-        }
-    return out
-
-
 def psi_kl_exact(
     cur_counts: Sequence[float], base_counts: Sequence[float]
 ) -> tuple:
-    """Driver-side reference arithmetic (used by tests as the oracle)."""
+    """Driver-side reference arithmetic (the tests' oracle)."""
     c = [float(x) for x in cur_counts]
     b = [float(x) for x in base_counts]
     sp = sum(c) + EPS * len(c)

@@ -29,7 +29,11 @@ MAX_VOCAB_VALUES = 1000
 
 
 def vocab_df(spark: SparkSession, values: Iterable, column: str) -> DataFrame:
-    return spark.createDataFrame([(v,) for v in values], [column])
+    """One-column vocabulary frame built from an Arrow table: a JVM local
+    relation, so reading it runs no Python worker."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({column: pa.array(list(values))}))
 
 
 def invalid_references(

@@ -13,8 +13,9 @@ which loops over records in Python. Here:
     vocabulary, literal or table-backed, resolves to a literal set
     (:func:`data_contract_engine_spark.operators.referential.
     fused_vocab_miss_agg`) and is decoded here;
-  * drift (A16) joins approx_percentile histograms and scores KL/PSI in a
-    pandas UDF (:mod:`data_contract_engine_spark.operators.drift`).
+  * drift (A16) counts histograms over the baseline snapshot's buckets in
+    the same fused aggregate and scores KL/PSI in one pandas UDF job
+    (:mod:`data_contract_engine_spark.operators.drift`).
 
 Semantics pinned from the reference:
   * statistics use POPULATION std-dev (`quality_validator.py:199-200`) —

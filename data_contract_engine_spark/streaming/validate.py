@@ -115,9 +115,9 @@ def drift_monitor(
     on_scores: Callable[[int, dict], None],
 ) -> Callable[[DataFrame, int], None]:
     """Streaming drift: per-micro-batch PSI/KL vs a precomputed baseline
-    snapshot ({col: {edges|cats, counts}} from ``drift.baseline_snapshot``
-    — numeric quantile bins AND categorical top-k buckets are both
-    scored, same as the batch engine).
+    snapshot (from ``drift.baseline_snapshot`` — numeric quantile bins
+    AND categorical top-k buckets are both scored, same as the batch
+    engine).
 
     Each batch costs one fused histogram agg over the batch plus the tiny
     Arrow-scored histogram relation — the streaming analog of the batch
@@ -125,27 +125,10 @@ def drift_monitor(
     move the reference window)."""
     from ..operators import drift as drift_op
 
-    edges = {c: s["edges"] for c, s in snapshot.items() if s.get("edges")}
-    cats = {c: s["cats"] for c, s in snapshot.items() if s.get("cats")}
-    base = {c: s["counts"] for c, s in snapshot.items()}
-
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if not (edges or cats) or not batch_df.take(1):
+        if not snapshot or not batch_df.take(1):
             return
-        num_cols, num_aggs = drift_op.multi_histogram_exprs(edges, exprs)
-        cat_cols, cat_aggs = drift_op.categorical_histogram_exprs(cats, exprs)
-        row = (
-            batch_df.select(*num_cols, *cat_cols).agg(*num_aggs, *cat_aggs)
-            .collect()[0].asDict()
-        )
-        n_bins = {c: len(e) + 1 for c, e in edges.items()}
-        n_bins.update({c: len(v) + 1 for c, v in cats.items()})
-        per_col = {
-            c: (drift_op.decode_histogram_row(row, c, n), base[c])
-            for c, n in n_bins.items()
-        }
-        spark = batch_df.sparkSession
-        on_scores(batch_id, drift_op.score_histograms_pandas(spark, per_col))
+        on_scores(batch_id, drift_op.drift_scores(batch_df, snapshot, exprs))
 
     return handle
 

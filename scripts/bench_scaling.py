@@ -48,9 +48,8 @@ contract = parse_contract_yaml(FLAGSHIP_CONTRACT_YAML, name="flagship")
 
 # drift baseline snapshot: computed ONCE when the baseline is established
 # (not per validation run) — untimed, like production
-from data_contract_engine_spark.operators.drift import baseline_snapshot
-snap = baseline_snapshot(
-    tr, {{c: s.get("expr") or c for c, s in contract.quality.drift.items()}})
+from data_contract_engine_spark.operators.drift import contract_baseline_snapshot
+snap = contract_baseline_snapshot(tr, contract.quality.drift)
 
 # warmup: JIT + codegen + python workers + parquet footers (not counted)
 eng = ContractEngine(spark, drift_baseline_snapshot=snap)

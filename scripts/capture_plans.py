@@ -81,7 +81,7 @@ def main():
         "```\n" + trim(plan_of(run.validated.select("passed"))) + "```\n"
     )
 
-    row_cols, aggs = run._agg_exprs(*run._drift_prep()[:3])
+    row_cols, aggs = run._agg_exprs(eng.drift_baseline_snapshot)
     out.append(
         "## 1b. Fused report aggregate — each rule once per row\n\n"
         "`report()`'s aggregate runs over `validated.select('*', "

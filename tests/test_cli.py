@@ -103,6 +103,82 @@ def test_validate_without_checkpoint_writes_violations(spark, tmp_path,
     }
 
 
+def test_validate_drift_baseline_honours_per_column_bins(spark, tmp_path,
+                                                        capsys, monkeypatch):
+    """--drift-baseline snapshots each drift column on its own declared
+    ``bins``: quantile edges for a numeric column, the top-k of a
+    categorical one — not the largest ``bins`` of the contract."""
+    from bisect import bisect_left
+
+    from data_contract_engine_spark.operators.drift import (
+        multi_quantile_edges,
+        psi_kl_exact,
+    )
+
+    monkeypatch.setenv("DCE_CLI_KEEP_SESSION", "1")
+    ddl = "a double, b double, c string"
+    cats = ["x"] * 10 + ["y"] * 6 + ["z"] * 4
+    base = spark.createDataFrame(
+        [(float(i % 100), float(i % 50), cats[i % 20]) for i in range(200)],
+        ddl,
+    )
+    cur_cats = ["x"] * 4 + ["y"] * 6 + ["z"] * 10
+    cur_rows = [
+        (float(i * 3 % 100 + 10), float(i % 30), cur_cats[i % 20])
+        for i in range(200)
+    ]
+    base_path = str(tmp_path / "base.parquet")
+    cur_path = str(tmp_path / "cur.parquet")
+    base.write.parquet(base_path)
+    spark.createDataFrame(cur_rows, ddl).write.parquet(cur_path)
+    contract = tmp_path / "contract.yaml"
+    contract.write_text(
+        'contract_version: "1.0"\n'
+        "schema:\n"
+        "  a: {type: float}\n"
+        "quality_rules:\n"
+        "  drift:\n"
+        "    a: {metric: psi, threshold: 0.0, bins: 5}\n"
+        "    b: {metric: psi, threshold: 0.0, bins: 10}\n"
+        "    c: {type: categorical, metric: psi, threshold: 0.0, bins: 2}\n"
+    )
+    rc = cli.main(
+        [
+            "validate",
+            "--input", cur_path,
+            "--contract", str(contract),
+            "--run-id", "test-cli-drift-bins",
+            "--key-columns", "a",
+            "--drift-baseline", base_path,
+        ]
+    )
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    psi = {
+        e["details"]["field"]: e["details"]["psi"]
+        for e in out["quality"]["errors"]
+    }
+    expected = {}
+    for col, bins in (("a", 5), ("b", 10)):
+        edges = multi_quantile_edges(base, {col: col}, bins)[col]
+        assert len(edges) == bins - 1
+
+        def counts(rows):
+            n = [0] * (len(edges) + 1)
+            for v in rows:
+                n[bisect_left(edges, v)] += 1
+            return n
+
+        i = "ab".index(col)
+        expected[col] = psi_kl_exact(
+            counts(r[i] for r in cur_rows),
+            counts(r[col] for r in base.collect()),
+        )[0]
+    # top-2 categories x (10/20) and y (6/20); z rolls into __other__
+    expected["c"] = psi_kl_exact([40, 60, 100], [100, 60, 40])[0]
+    assert psi == pytest.approx(expected, rel=1e-9)
+
+
 def test_package_zip(tmp_path):
     import sys
 

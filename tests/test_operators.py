@@ -1,6 +1,8 @@
 """Uniqueness / referential / drift operator tests."""
 
 import math
+from bisect import bisect_left
+from collections import Counter
 
 import pytest
 
@@ -11,10 +13,9 @@ from data_contract_engine_spark.operators import uniqueness as uniq_op
 import pytest
 
 from data_contract_engine_spark.operators.drift import (
-    histogram,
+    multi_quantile_edges,
     psi_kl,
     psi_kl_exact,
-    quantile_edges,
 )
 
 
@@ -83,6 +84,17 @@ def test_referential_anti_join_broadcast(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
+def test_vocab_df_is_a_local_relation(spark):
+    """A vocabulary frame is a JVM local relation: reading it runs no
+    Python worker (no PythonRDD / ExistingRDD scan)."""
+    vocab = ref_op.vocab_df(spark, ["search", "browser"], "tool")
+    qe = vocab._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert "PythonRDD" not in qe.toRdd().toDebugString()
+    assert sorted(r["tool"] for r in vocab.collect()) == ["browser", "search"]
+
+
 def test_drift_zero_for_identical(spark):
     df = spark.range(5000).select((F.col("id") % 100).cast("double").alias("x"))
     score = psi_kl(df, df, "x", bins=10)
@@ -102,9 +114,12 @@ def test_drift_detects_shift(spark):
 def test_psi_matches_exact_arithmetic(spark):
     base = spark.range(2000).select((F.col("id") % 50).cast("double").alias("x"))
     cur = spark.range(2000).select(((F.col("id") * 7) % 90).cast("double").alias("x"))
-    edges = quantile_edges(base, "x", 10)
-    ch = {r["bin"]: r["cnt"] for r in histogram(cur, "x", edges).collect()}
-    bh = {r["bin"]: r["cnt"] for r in histogram(base, "x", edges).collect()}
+    edges = multi_quantile_edges(base, {"x": "x"}, 10)["x"]
+
+    def hist(df):  # bin i holds edges[i-1] < v <= edges[i]
+        return Counter(bisect_left(edges, r["x"]) for r in df.collect())
+
+    ch, bh = hist(cur), hist(base)
     bins = sorted(set(ch) | set(bh))
     exp_psi, exp_kl = psi_kl_exact(
         [ch.get(b, 0) for b in bins], [bh.get(b, 0) for b in bins]
@@ -237,12 +252,16 @@ def test_categorical_other_collision_raises(spark):
     with pytest.raises(ValueError, match="__other__"):
         drift.baseline_snapshot(df, {"lang": "lang"}, bins=5,
                                 categorical=["lang"])
-    # current-side literal also raises (baseline clean)
+    # a current-side literal counts in the __other__ bucket (baseline
+    # clean), as in the engine and the stream monitor
     base = spark.createDataFrame([("en",), ("fr",)], ["lang"])
     cur = spark.createDataFrame([("en",), ("__other__",)], ["lang"])
-    with pytest.raises(ValueError, match="__other__"):
-        drift.psi_kl_categorical(cur, base, "lang")
-    # collision BELOW the top-k is caught by the ride-along flag
+    s = drift.psi_kl_categorical(cur, base, "lang")
+    psi, kl = drift.psi_kl_exact([1, 0, 1], [1, 1, 0])  # en, fr, __other__
+    assert s.bins == 3
+    assert s.psi == pytest.approx(psi, rel=1e-9)
+    assert s.kl == pytest.approx(kl, rel=1e-9)
+    # a baseline collision BELOW the top-k raises too
     crowd = [(c,) for c in "abcdef" for _ in range(5)] + [("__other__",)]
     rare = spark.createDataFrame(crowd, ["lang"])
     with pytest.raises(ValueError, match="__other__"):

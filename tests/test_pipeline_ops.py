@@ -1486,6 +1486,21 @@ def test_ks_drift(spark):
                           edges=edges) == 0.0
 
 
+def test_ks_drift_empty_side_raises(spark):
+    """KS has no CDF for a side without values: an empty current side
+    raises instead of reading as "no drift", on given and on quantile
+    edges."""
+    from data_contract_engine_spark.operators import drift
+
+    base = spark.createDataFrame([(float(i % 50),) for i in range(500)],
+                                 "v double")
+    empty = spark.createDataFrame([], "v double")
+    with pytest.raises(ValueError, match="zero total count"):
+        drift.ks_drift(empty, base, "v", edges=[10.0, 20.0])
+    with pytest.raises(ValueError, match="current=0"):
+        drift.ks_drift(empty, base, "v")
+
+
 def test_chunk_documents(spark):
     d = spark.createDataFrame(
         [

@@ -285,6 +285,10 @@ def test_categorical_drift_rule_in_contract(spark):
     """drift: {col: {type: categorical}} buckets by the baseline's
     category set (+__other__) instead of numeric edges, fused into the
     same agg pass; unseen categories register as drift."""
+    from data_contract_engine_spark.operators.drift import (
+        contract_baseline_snapshot,
+    )
+
     base_rows = [("a", float(i), _ts(0), "x") for i in range(50)] + [
         ("b", 1.0, _ts(0), "y")
     ] * 50
@@ -309,8 +313,10 @@ def test_categorical_drift_rule_in_contract(spark):
         }
     )
 
-    base = spark.createDataFrame(base_rows, ddl)
-    eng = ContractEngine(spark, now_epoch=NOW, drift_baseline=base)
+    snap = contract_baseline_snapshot(
+        spark.createDataFrame(base_rows, ddl), contract.quality.drift
+    )
+    eng = ContractEngine(spark, now_epoch=NOW, drift_baseline_snapshot=snap)
     rep = eng.validate(
         spark.createDataFrame(cur_same, ddl), contract, key_columns=["id"]
     ).report()
